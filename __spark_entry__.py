@@ -472,12 +472,12 @@ def q_nkg_gold_compacted_conv(spark, sf_dir):
         F.col("N").cast("int").alias("N"), "canonical_json")
 
 
-def _q_multi_schema(schema, cap: int | None = None):
+def _q_multi_schema(schema):
     """Gold-scored extraction for the event/role/hypergraph schemas over the
     reference's FULL dev corpus (1000 docs; read-only data fixture;
     rows-only check — exact oracle parity + >=0.95 gold recovery are
-    pytest-asserted).  ``cap`` optionally limits the doc count for quick
-    local runs; the driver-visible entries run uncapped."""
+    pytest-asserted).  Raises FileNotFoundError when the corpus is absent,
+    so a missing fixture cannot pass as an empty result."""
 
     def q(spark, sf_dir):
         import os
@@ -492,10 +492,8 @@ def _q_multi_schema(schema, cap: int | None = None):
         path = ("/root/reference/datasets/hyperred_processed_data/"
                 f"hyperred_{schema}/dev.json")
         if not os.path.exists(path):
-            return spark.createDataFrame([], "doc_id long")
+            raise FileNotFoundError(f"{path}: missing reference corpus")
         docs = with_line_numbers(read_reference_jsonl(spark, path))
-        if cap is not None:
-            docs = docs.limit(cap)
         norm = normalize_reference_docs(docs, schema)
         labels = labels_from_normalized(norm, schema)
         return extract_facts_multi(

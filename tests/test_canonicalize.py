@@ -66,7 +66,7 @@ def test_exploded_minhash_matches_hof_oracle(spark):
     md5 inputs, same lexicographic mins)."""
     from text2nkg_spark.operators.canonicalize import (
         char_shingles, minhash_signature)
-    from text2nkg_spark.operators.dedup import exploded_min_md5
+    from text2nkg_spark.operators.canonicalize import exploded_min_md5
 
     surfaces = spark.createDataFrame(
         [("alpha beta",), ("alphabet",), ("gamma delta epsilon",), ("x",)],

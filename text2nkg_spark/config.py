@@ -29,11 +29,6 @@ class PipelineConfig:
     Physical knobs (Spark-side only; no effect on emitted facts):
       * ``shuffle_partitions`` — sized to cluster; at 100 TB set to
         ~2-3x total executor cores.
-      * ``skew_salt_buckets`` — number of salt buckets for the scoring
-        stage on mention-dense sentences (0 disables).
-      * ``score_chunk`` — candidates per scoring batch row group, the
-        analogue of the reference's max_pair_length^2 chunking
-        (run_re.py:563, 577).
     """
 
     nary_schema: str = "hyperrelation"
@@ -52,9 +47,6 @@ class PipelineConfig:
 
     # physical
     shuffle_partitions: int = 32
-    skew_salt_buckets: int = 8
-    skew_cost_threshold: int = 1000  # E^3 above which the scoring stage salts
-    score_chunk: int = 1024
 
     # --eval_unidirect flag (run_re.py:1291, 2652) — GRAFT-DEFINED
     # semantics: decode every candidate ordering on its own raw logits, no

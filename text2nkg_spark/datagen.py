@@ -107,11 +107,6 @@ def gen_turn(cfg: DataGenConfig, conv_num: int, turn_idx: int) -> dict:
     }
 
 
-def conv_doc_id(conv_id: str) -> int:
-    """Stable numeric key for a conv_id, shared by scorers and the oracle."""
-    return int(conv_id.removeprefix("conv"))
-
-
 def gen_transcripts_pdf(cfg: DataGenConfig) -> pd.DataFrame:
     """Local (driver-side) generation — test scale."""
     rows = [

@@ -22,7 +22,7 @@ Everything is native Spark SQL:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 # distinct-surface count at or below which canonicalize_entities runs the
@@ -36,6 +36,51 @@ _LOCAL_VOCAB_THRESHOLD = 5000
 _SHINGLE_N = 3
 _LSH_SEED = 42
 _LSH_MAX_BUCKET = 4096
+
+
+def exploded_min_md5(
+    grams_df: DataFrame,
+    id_cols: list[str],
+    gram_col: str,
+    num_hashes: int,
+    key,
+    alias: str = "_m",
+) -> DataFrame:
+    """Shared exploded minhash shape: one min-md5 aggregate per hash over
+    exploded grams — flat codegen-friendly expressions (the nested-HOF
+    variant both costs seconds of janino work per session and re-inlines
+    its input under CollapseProject).  ``key(h, gram_col)`` builds the
+    seed/hash-prefixed hash input.
+    Output: id_cols + {alias}0..{alias}{n-1}.
+    """
+    aggs = [
+        F.min(F.md5(key(h, F.col(gram_col)))).alias(f"{alias}{h}")
+        for h in range(num_hashes)
+    ]
+    return grams_df.groupBy(*id_cols).agg(*aggs)
+
+
+def cap_bucket_width(
+    banded: DataFrame, keys: list[str], order_col: str, max_bucket: int
+) -> DataFrame:
+    """Truncate each bucket to its first ``max_bucket`` rows (deterministic
+    ``order_col`` order).
+
+    The LSH self-join is quadratic in bucket width; one degenerate bucket
+    (a boilerplate shingle shared by millions of surfaces) becomes a single
+    O(W^2) join task no AQE can split.  Truncation bounds every task at
+    max_bucket^2 pairs; members of a true duplicate cluster still pair with
+    each other inside the kept prefix.  The window is one extra shuffle on the same join key,
+    O(W log W) per bucket — cheap insurance at 100 TB.
+    """
+    if max_bucket <= 0:
+        return banded
+    w = Window.partitionBy(*keys).orderBy(order_col)
+    return (
+        banded.withColumn("_bkt_rn", F.row_number().over(w))
+        .where(F.col("_bkt_rn") <= max_bucket)
+        .drop("_bkt_rn")
+    )
 
 
 def char_shingles(col, n: int = 3):
@@ -57,7 +102,7 @@ def minhash_signature(shingles_col, num_hashes: int, seed: int = 42):
     digests over seed/band-prefixed shingles — bit-reproducible in any
     engine with md5.
 
-    TEST-ONLY oracle shape: production uses dedup.exploded_min_md5 (flat
+    TEST-ONLY oracle shape: production uses exploded_min_md5 (flat
     codegen-friendly expressions); tests/test_canonicalize.py asserts the
     two produce identical signatures.  Nested HOFs compile through janino
     in seconds per fresh session — never put this in a hot path."""
@@ -180,7 +225,7 @@ def lsh_candidate_pairs(
     surfaces: distinct strings, one per row.  Returns (a, b, jaccard).
     Degenerate band buckets are truncated at ``max_bucket`` rows (surface
     order) — one boilerplate bucket must not become an unsplittable
-    O(W^2) join task (see dedup.cap_bucket_width).
+    O(W^2) join task (see cap_bucket_width).
 
     Size-adaptive like :func:`connected_components`: at or below
     ``local_threshold`` distinct surfaces the whole LSH runs driver-side
@@ -219,8 +264,6 @@ def lsh_candidate_pairs(
     # expressions stay inside whole-stage codegen AND compile in ms, where
     # the nested-HOF tree took seconds of janino work per fresh session
     # (the dominant cold cost of the entities query)
-    from text2nkg_spark.operators.dedup import exploded_min_md5
-
     ex = sh.select("s", F.explode("sh").alias("g"))
     minned = exploded_min_md5(
         ex, ["s"], "g", num_hashes,
@@ -234,8 +277,6 @@ def lsh_candidate_pairs(
                 for r in range(rows_per_band)]))
             for b in range(bands)])).alias("band_id", "band_hash"),
     )
-    from text2nkg_spark.operators.dedup import cap_bucket_width
-
     banded = cap_bucket_width(banded, ["band_id", "band_hash"], "s", max_bucket)
     pairs = (
         banded.alias("l")

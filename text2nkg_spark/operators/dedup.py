@@ -28,6 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# exploded_min_md5 / cap_bucket_width live with their NKG caller
+# (canonicalize) and are shared from there
+from text2nkg_spark.operators.canonicalize import (  # noqa: F401
+    cap_bucket_width, exploded_min_md5)
 from text2nkg_spark.operators.similarity import hyperplane_bucket, md5_hash52
 
 
@@ -137,29 +141,6 @@ def exploded_word_ngrams(
     ).where(F.col("_last").isNotNull()).drop("_last")
 
 
-def exploded_min_md5(
-    grams_df: DataFrame,
-    id_cols: list[str],
-    gram_col: str,
-    num_hashes: int,
-    key,
-    alias: str = "_m",
-) -> DataFrame:
-    """Shared exploded minhash shape: one min-md5 aggregate per hash over
-    exploded grams — flat codegen-friendly expressions (the nested-HOF
-    variant both costs seconds of janino work per session and re-inlines
-    its input under CollapseProject).  ``key(h, gram_col)`` builds the
-    seed/hash-prefixed hash input, so the word-shingle and char-shingle
-    minhash families share ONE implementation and cannot silently diverge.
-    Output: id_cols + {alias}0..{alias}{n-1}.
-    """
-    aggs = [
-        F.min(F.md5(key(h, F.col(gram_col)))).alias(f"{alias}{h}")
-        for h in range(num_hashes)
-    ]
-    return grams_df.groupBy(*id_cols).agg(*aggs)
-
-
 def md5_minhash_signatures_exploded(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -182,30 +163,6 @@ def md5_minhash_signatures_exploded(
     return exploded_min_md5(
         grams, ["doc_id"], "gram", num_hashes,
         lambda h, g: F.concat(F.lit(f"{h}|"), g), alias="sig")
-
-
-def cap_bucket_width(
-    banded: DataFrame, keys: list[str], order_col: str, max_bucket: int
-) -> DataFrame:
-    """Truncate each bucket to its first ``max_bucket`` rows (deterministic
-    ``order_col`` order).
-
-    The LSH self-join is quadratic in bucket width; one degenerate bucket
-    (a boilerplate shingle shared by millions of docs) becomes a single
-    O(W^2) join task no AQE can split.  Truncation bounds every task at
-    max_bucket^2 pairs; members of a true duplicate cluster still pair with
-    each other inside the kept prefix (and exact dedup catches identical
-    docs regardless).  The window is one extra shuffle on the same join key,
-    O(W log W) per bucket — cheap insurance at 100 TB.
-    """
-    if max_bucket <= 0:
-        return banded
-    w = Window.partitionBy(*keys).orderBy(order_col)
-    return (
-        banded.withColumn("_bkt_rn", F.row_number().over(w))
-        .where(F.col("_bkt_rn") <= max_bucket)
-        .drop("_bkt_rn")
-    )
 
 
 def minhash_lsh_pairs(

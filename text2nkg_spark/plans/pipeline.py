@@ -108,17 +108,6 @@ def extract(
     return extract_facts_fused(sents, cfg, space)
 
 
-def materialize_graph(preds: DataFrame) -> dict[str, DataFrame]:
-    """Prediction rows -> the fact/qualifier/compacted tables."""
-    facts = fact_table(preds)
-    return {
-        "facts": facts,
-        "main_triples": main_triples(facts),
-        "fact_qualifiers": qualifier_triples(facts),
-        "compacted": compacted_facts(facts),
-    }
-
-
 def run_pipeline(
     spark,
     transcripts: DataFrame,

@@ -2,9 +2,10 @@
 
 Two launch shapes, one factory:
 
-* **Self-launched** (tests, bench, ``python jobs/...``): we pick the master
-  (``local[$SPARK_GRAFT_CPUS]``), size ``spark.sql.shuffle.partitions`` to
-  the core count, and set driver memory / UI off for local iteration.
+* **Self-launched** (tests, perfbench, ``python jobs/...``): we pick the
+  master (``local[$SPARK_GRAFT_CPUS]``, every core of the host when unset),
+  size ``spark.sql.shuffle.partitions`` to the core count, and set driver
+  memory / UI off for local iteration.
 * **Under ``spark-submit``** (the north-rule deployment:
   ``spark-submit --py-files text2nkg_spark.zip jobs/...``): the launcher owns
   the master and resources — ``--master yarn``/``k8s://...``, executor and
@@ -47,7 +48,7 @@ def get_spark(
 
     launched = master is None and _under_spark_submit()
     if not launched:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
         master = master or f"local[{cores}]"
         if shuffle_partitions is None:
             try:
