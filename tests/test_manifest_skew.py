@@ -8,8 +8,7 @@ from text2nkg_spark.datagen import gen_transcripts_pdf
 from text2nkg_spark.operators.extraction import (
     decode_scores, extract_facts_fused, score_candidates,
     split_dense_sentences)
-from text2nkg_spark.plans.manifest import (
-    StageManifest, input_fingerprint, partition_stats)
+from text2nkg_spark.plans.manifest import StageManifest, input_fingerprint
 from text2nkg_spark.plans.pipeline import default_label_space, prepare_sentences
 
 GEN = DataGenConfig(n_convs=25, turns_per_conv=6, seed=21,
@@ -52,9 +51,80 @@ def test_run_stage_builds_then_resumes(spark, tr, tmp_path_factory):
     assert sum(p["rows"] for p in meta["partitions"]) == n1
 
 
-def test_partition_stats_cover_all_rows(spark, tr):
-    st = partition_stats(tr.repartition(7)).collect()
-    assert sum(r.rows for r in st) == tr.count()
+def test_fingerprint_covers_every_row(spark):
+    """An edit to a row past the first 1000 must change the resume key,
+    or a rerun serves facts of the old text."""
+    import pandas as pd
+
+    pdf = pd.DataFrame({"conv_id": [f"c{i // 8:04d}" for i in range(1200)],
+                        "turn_idx": [i % 8 for i in range(1200)],
+                        "text": [f"turn {i} entA" for i in range(1200)]})
+    edited = pdf.copy()
+    edited.loc[1150, "text"] = "turn 1150 entB"
+    a = input_fingerprint(spark.createDataFrame(pdf))
+    b = input_fingerprint(spark.createDataFrame(edited))
+    assert a != b
+    # and it is order-insensitive: the same rows in another order agree
+    assert input_fingerprint(
+        spark.createDataFrame(pdf.iloc[::-1].reset_index(drop=True))) == a
+
+
+def test_crash_mid_write_never_resumes_partial(spark, tr, tmp_path_factory):
+    """Build on input A, then die mid-write of a rebuild on input B: a
+    rerun on A must rebuild, not trust A's manifest over B's partial
+    directory."""
+    man = StageManifest(str(tmp_path_factory.mktemp("crash")))
+    calls = {"n": 0}
+
+    def build_a():
+        calls["n"] += 1
+        return tr.select("conv_id", "turn_idx", "text")
+
+    last_conv = tr.agg(F.max("conv_id")).first()[0]
+
+    @F.udf("string")
+    def dies_on_last_conv(conv_id, text):
+        if conv_id == last_conv:
+            raise RuntimeError("killed mid-write")
+        return text
+
+    want = sorted(map(tuple, man.run_stage(spark, "s", "A", build_a)
+                      .collect()))
+    with pytest.raises(Exception, match="killed mid-write"):
+        man.run_stage(spark, "s", "B", lambda: tr.repartition(4).select(
+            "conv_id", "turn_idx",
+            dies_on_last_conv("conv_id", "text").alias("text")))
+    got = man.run_stage(spark, "s", "A", build_a)
+    assert calls["n"] == 2
+    assert sorted(map(tuple, got.collect())) == want
+
+
+def _jobs_started(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_stage_job_counts(spark, tr, tmp_path_factory):
+    """Lineage comes from the write: a fresh stage runs only its write's
+    job, and a resume runs none (no schema inference, no stats collect)."""
+    man = StageManifest(str(tmp_path_factory.mktemp("jobs")))
+    fp = input_fingerprint(tr)
+    tr.count()  # the cache fills outside the counted groups
+
+    def build():
+        return tr.select("conv_id", "turn_idx", "text")
+
+    assert _jobs_started(spark, "fresh_stage", lambda: man.run_stage(
+        spark, "narrow", fp, build)) == 1
+    assert _jobs_started(spark, "resumed_stage", lambda: man.run_stage(
+        spark, "narrow", fp, build)) == 0
 
 
 def test_split_dense_two_stage_equals_fused(spark, tr):

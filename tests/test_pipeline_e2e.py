@@ -225,6 +225,25 @@ def test_mention_surfaces(spark, data):
     assert bad == 0
 
 
+def test_sentence_surfaces_match_mention_surfaces(spark, data):
+    """Surfaces sliced from the sentences contract are the rows detection
+    gives, including for empty, mention-free and double-spaced turns."""
+    from text2nkg_spark.operators.mentions import sentence_surfaces
+
+    tr, _ = data
+    edge = spark.createDataFrame(
+        [("edge", 0, ""), ("edge", 1, "no marks here"),
+         ("edge", 2, "x  entA entB  y entC"), ("edge", 3, None)],
+        "conv_id string, turn_idx int, text string")
+    turns = tr.select("conv_id", "turn_idx", "text").unionByName(edge)
+    want = mention_surfaces(detect_mentions(turns))
+    got = sentence_surfaces(prepare_sentences(turns))
+    assert got.columns == want.columns
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert got.where(F.col("conv_id") == "edge").count() == 2
+
+
 def test_conv_level_compaction(spark, data, extraction):
     """'conv' mode merges same-(rel,subj,obj) facts across turns with
     document-order qualifier merging (literal run_re.py:2400-2423)."""

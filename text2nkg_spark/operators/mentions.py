@@ -160,3 +160,19 @@ def mention_surfaces(df: DataFrame) -> DataFrame:
         ).alias("surface"),
     )
     return out
+
+
+def sentence_surfaces(sents: DataFrame) -> DataFrame:
+    """``mention_surfaces`` rows from the flat sentence contract
+    (``conv_id, turn_idx, text, m_starts, m_ends``, as
+    ``plans.pipeline.prepare_sentences`` emits it): the same rows as
+    ``mention_surfaces(detect_mentions(turns))``, without detecting again.
+    Spans are only ever non-empty on non-empty text, where ``with_tokens``
+    is the same split."""
+    return mention_surfaces(sents.select(
+        "conv_id", "turn_idx",
+        F.split("text", " ").alias("tokens"),
+        F.expr("zip_with(m_starts, m_ends, "
+               "(s, e) -> named_struct('start', s, 'end', e))")
+        .alias("mentions"),
+    ))

@@ -1,43 +1,35 @@
-"""Checkpoint / lineage manifests — per-stage, per-partition, resumable.
+"""Checkpoint / lineage manifests — per-stage, per-file, resumable.
 
 The reference checkpoints model weights (run_re.py:862-888); our analogue is
 pipeline-stage checkpointing: every materialized stage writes
 
 * its data as partitioned parquet (Iceberg on clusters that ship the
   runtime jar — the writer is format-parameterized), and
-* a manifest row per output partition: (stage, part_id, rows, content_hash)
-  plus a stage-level row with input fingerprint + wall time.
+* a manifest with the stage's input fingerprint, wall time, read schema and
+  one (file, rows) entry per committed parquet file, the row count read from
+  that file's footer.
 
-``run_stage`` consults the manifest before recomputing: if a stage directory
-exists with a COMPLETE marker and the same input fingerprint, the stage is
-skipped and its parquet is reused — exact resume after a crash, kill -9
-included, because the marker is written only after the data commit.
+Lineage comes from the write itself: the footers are read on the driver and
+the stored schema reads the stage back without a schema-inference job, so a
+stage costs its build's Spark jobs and nothing more, and a resume costs none.
+
+``run_stage`` consults the manifest before recomputing: if the stage's
+manifest is complete, has a schema and carries the same input fingerprint,
+the stage is skipped and its parquet is reused — exact resume after a crash,
+kill -9 included, because the manifest is deleted before the stage directory
+is overwritten and committed (atomically) only after the data commit.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def partition_stats(df: DataFrame) -> DataFrame:
-    """Per-partition lineage: row counts + order-insensitive content hash."""
-    return (
-        df.withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(
-                F.conv(
-                    F.substring(F.sha2(F.to_json(F.struct("*")), 256), 1, 15),
-                    16, 10,
-                ).cast("decimal(38,0)")
-            ).cast("string").alias("content_hash"),
-        )
-    )
+from pyspark.sql.types import StructType
 
 
 def lineage_manifest(
@@ -46,14 +38,14 @@ def lineage_manifest(
     """Engine-portable per-partition lineage: (stage, part_id, rows,
     content_hash) keyed by an EXPLICIT partition column.
 
-    Unlike :func:`partition_stats` (spark_partition_id — fast but
-    placement-dependent), this manifest is reproducible by any engine that
-    can group by ``part_col``: content_hash = bit_xor of the 52-bit md5 of
-    a canonical "\\x01"-joined row string — order-insensitive (xor
-    commutes), overflow-free (52-bit values under ANSI mode), and exactly
-    float64-representable so a DuckDB/downstream auditor recomputes it
-    bit-for-bit.  This is the hash a resume/audit step compares across a
-    write→read round trip.
+    Unlike the per-file row counts ``StageManifest`` stores (which depend
+    on how the write placed rows in files), this manifest is reproducible
+    by any engine that can group by ``part_col``: content_hash = bit_xor of
+    the 52-bit md5 of a canonical "\\x01"-joined row string —
+    order-insensitive (xor commutes), overflow-free (52-bit values under
+    ANSI mode), and exactly float64-representable so a DuckDB/downstream
+    auditor recomputes it bit-for-bit.  This is the hash a resume/audit
+    step compares across a write→read round trip.
     """
     from text2nkg_spark.operators.similarity import md5_hash52
 
@@ -82,14 +74,6 @@ class StageManifest:
     def _meta_path(self, stage: str) -> str:
         return os.path.join(self.root, f"{stage}.manifest.json")
 
-    def is_complete(self, stage: str, input_fingerprint: str) -> bool:
-        p = self._meta_path(stage)
-        if not os.path.exists(p):
-            return False
-        with open(p) as f:
-            meta = json.load(f)
-        return meta.get("complete") and meta.get("input_fingerprint") == input_fingerprint
-
     def run_stage(
         self,
         spark: SparkSession,
@@ -100,8 +84,17 @@ class StageManifest:
     ) -> DataFrame:
         """Build-or-resume one stage; returns the stage DataFrame (from disk)."""
         out_dir = self._stage_dir(stage)
-        if self.is_complete(stage, input_fingerprint):
-            return spark.read.parquet(out_dir)
+        meta = self.read_meta(stage)
+        # a manifest without a read schema predates stored schemas: rebuild
+        if (meta and meta.get("complete") and "schema" in meta
+                and meta.get("input_fingerprint") == input_fingerprint):
+            return spark.read.schema(
+                StructType.fromJson(meta["schema"])).parquet(out_dir)
+        # the old manifest must not outlive the data it vouches for: a
+        # build that dies mid-write leaves a partial directory, and a rerun
+        # on the old input must rebuild it, not resume from it
+        if meta is not None:
+            os.remove(self._meta_path(stage))
 
         t0 = time.time()
         df = build()
@@ -110,13 +103,18 @@ class StageManifest:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out_dir)
 
-        written = spark.read.parquet(out_dir)
-        parts = [r.asDict() for r in partition_stats(written).collect()]
+        parts = _file_row_counts(out_dir)
+        # a parquet readback lists partition columns last
+        last = partition_by or []
+        schema = StructType(
+            [f for f in df.schema.fields if f.name not in last]
+            + [df.schema[c] for c in last])
         meta = {
             "stage": stage,
             "complete": True,
             "input_fingerprint": input_fingerprint,
-            "rows_out": int(sum(p["rows"] for p in parts)),
+            "schema": schema.jsonValue(),
+            "rows_out": sum(p["rows"] for p in parts),
             "partitions": parts,
             "wall_s": time.time() - t0,
         }
@@ -124,7 +122,8 @@ class StageManifest:
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, self._meta_path(stage))  # atomic commit marker
-        return written
+        # the stored schema spares the readback a schema-inference job
+        return spark.read.schema(schema).parquet(out_dir)
 
     def read_meta(self, stage: str) -> dict | None:
         p = self._meta_path(stage)
@@ -134,14 +133,23 @@ class StageManifest:
             return json.load(f)
 
 
-def input_fingerprint(df: DataFrame, sample: int = 1000) -> str:
-    """Cheap deterministic fingerprint of an input: schema + bounded sample
-    hash + count.  Used as the resume key for downstream stages."""
-    cnt = df.count()
-    h = (
-        df.limit(sample)
-        .select(F.sha2(F.to_json(F.struct("*")), 256).alias("h"))
-        .agg(F.sha2(F.concat_ws("", F.sort_array(F.collect_list("h"))), 256))
-        .collect()[0][0]
-    )
-    return f"{df.schema.simpleString()}|{cnt}|{h}"
+def _file_row_counts(out_dir: str) -> list[dict]:
+    """(file, rows) for every committed parquet file under ``out_dir``, the
+    rows read from the file's footer on the driver — no Spark job."""
+    paths = sorted(glob.glob(os.path.join(out_dir, "**", "*.parquet"),
+                             recursive=True))
+    return [{"file": os.path.relpath(p, out_dir),
+             "rows": pq.read_metadata(p).num_rows} for p in paths]
+
+
+def input_fingerprint(df: DataFrame) -> str:
+    """Deterministic fingerprint of an input: schema + row count + the sum
+    of a 64-bit hash of every row (an order-insensitive multiset hash), in
+    one aggregate job.  Used as the resume key for downstream stages, so a
+    change to any row changes it."""
+    r = df.select(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(F.to_json(F.struct("*"))).cast("decimal(38,0)"))
+        .alias("h"),
+    ).first()
+    return f"{df.schema.simpleString()}|{r.n}|{r.h}"

@@ -118,8 +118,8 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """The checkpointed end-to-end pipeline (SURVEY.md §4 item 4).
 
-    Every stage writes parquet + a manifest (stage fingerprint, per-partition
-    row counts + content hashes); a rerun — including after a mid-pipeline
+    Every stage writes parquet + a manifest (stage fingerprint, read schema,
+    per-file footer row counts); a rerun — including after a mid-pipeline
     crash — resumes from the last complete stage (tested by deleting a stage
     manifest and observing only the suffix rebuild).  Fact tables partition
     by a conv-hash bucket so downstream per-conversation reads prune.
@@ -127,8 +127,7 @@ def run_pipeline(
     from pyspark.sql import functions as F  # noqa: F811
 
     from text2nkg_spark.operators.canonicalize import canonicalize_entities
-    from text2nkg_spark.operators.mentions import (
-        detect_mentions, mention_surfaces)
+    from text2nkg_spark.operators.mentions import sentence_surfaces
     from text2nkg_spark.plans.manifest import StageManifest, input_fingerprint
 
     space = space or default_label_space()
@@ -154,7 +153,8 @@ def run_pipeline(
     preds = man.run_stage(
         spark, "predictions", fp2,
         lambda: extract_facts_fused(sents, cfg, space).withColumn(
-            "conv_bucket", F.pmod(F.xxhash64("conv_id"), 16)),
+            # int: the type a readback infers from the directory names
+            "conv_bucket", F.pmod(F.xxhash64("conv_id"), 16).cast("int")),
         partition_by=["conv_bucket"])
 
     facts = man.run_stage(
@@ -167,13 +167,13 @@ def run_pipeline(
         spark, "compacted", fp2, lambda: compacted_facts(facts))
 
     def build_s2e():
-        surf = mention_surfaces(detect_mentions(transcripts))
+        surf = sentence_surfaces(sents)
         return canonicalize_entities(surf)["surface_to_entity"]
 
     s2e = man.run_stage(spark, "surface_to_entity", fp, build_s2e)
 
     def build_entities():
-        surf = mention_surfaces(detect_mentions(transcripts))
+        surf = sentence_surfaces(sents)
         return (
             surf.join(s2e, "surface")
             .groupBy("entity_id")
