@@ -33,7 +33,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="transcripts table path (parquet/Iceberg)")
     ap.add_argument("--output", required=True, help="output root directory")
-    ap.add_argument("--scorer", default="hash", choices=["hash", "gold", "model"])
+    # no 'gold': the gold scorer needs a gold table, which the job cannot
+    # take (run_pipeline(..., gold=...) from Python)
+    ap.add_argument("--scorer", default="hash", choices=["hash", "model"])
     ap.add_argument("--tokenizer", default="identity",
                     choices=["identity", "wordpiece"],
                     help="candidate-pruning tokenizer (subword bounds)")

@@ -202,7 +202,7 @@ def test_score_values_match_oracle():
 def test_fast_decode_equals_loop(e, seed):
     """Vectorized fast-path decode == loop decode, bit-for-bit."""
     from text2nkg_spark.decode_core import (
-        decode_sentence_arrays, decode_sentence_fast)
+        decode_sentence, decode_sentence_arrays)
 
     space = _space()
     rng = np.random.default_rng(1000 + seed)
@@ -210,7 +210,7 @@ def test_fast_decode_equals_loop(e, seed):
     cand = enumerate_triples(ents, 256)
     rel_lg = log_softmax(hash_logits(21, 5, cand[:, 4:10], space.num_classes, seed, 0))
     q_lg = log_softmax(hash_logits(21, 5, cand[:, 4:10], space.num_classes, seed, 1))
-    fast = decode_sentence_fast(ents, cand, rel_lg, q_lg, space)
+    fast = decode_sentence(ents, cand, rel_lg, q_lg, space)
     loop = decode_sentence_arrays(ents, cand, rel_lg, q_lg, space)
     assert fast == loop
 

@@ -6,8 +6,8 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from text2nkg_spark.candidates import enumerate_triples
-from text2nkg_spark.decode_core import (
-    decode_sentence_arrays, decode_sentence_fast)
+from text2nkg_spark import decode_core
+from text2nkg_spark.decode_core import decode_sentence_arrays
 from text2nkg_spark.labels import LabelSpace, make_synthetic_labels
 from text2nkg_spark.reference_oracle import decode_sentence
 from text2nkg_spark.scoring_core import (
@@ -47,7 +47,7 @@ def test_hash_decode_parity_property(ents, seed, doc, sent):
     rel = log_softmax(hash_logits(doc, sent, cand[:, 4:10], SPACE.num_classes, seed, 0))
     q = log_softmax(hash_logits(doc, sent, cand[:, 4:10], SPACE.num_classes, seed, 1))
     loop = decode_sentence_arrays(ents, cand, rel, q, SPACE)
-    fast = decode_sentence_fast(ents, cand, rel, q, SPACE)
+    fast = decode_core.decode_sentence(ents, cand, rel, q, SPACE)
     want = decode_sentence(_pair_dict(ents, cand, rel, q), SPACE)
     got = [((p[0], p[1]), (p[2], p[3]), p[4], (p[5], p[6]), p[7]) for p in loop]
     assert got == want

@@ -15,6 +15,13 @@ Ensemble algebra (sym block = ['NIL'], swap(x) = x[:1]+x[num:]+x[1:num]):
     Qc[i,j,k] = Q[ijk] + Q[jik] + S[ikj] + swap(S[jki]) + S[kij] + swap(Q[kji])
 
 (derived from run_re.py:1317-1386; S = rel logits, Q = qualifier logits).
+
+One entry point decodes: :func:`decode_sentences_batch` takes many
+sentences and picks the path per sentence — the ``--eval_unidirect``
+ablation (:func:`decode_sentence_unidirect`), the reference loop
+(:func:`decode_sentence_arrays`) for ``same_entity`` or a pruned
+candidate grid, and otherwise one (B, E, E, E, C) tensor pipeline per
+entity-count group.  :func:`decode_sentence` is that call on one sentence.
 """
 
 from __future__ import annotations
@@ -29,27 +36,16 @@ class MissingOrderingError(ValueError):
     run_re.py:1328/1343/1358/1373/1386)."""
 
 
-def ensemble_tensors(
-    e: int,
-    cand: np.ndarray,      # (N, 10) from candidates.enumerate_triples
-    rel_lg: np.ndarray,    # (N, C) float64
-    q_lg: np.ndarray,      # (N, C) float64
-    space: LabelSpace,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Returns (V, Qc, present) dense tensors over entity index triples."""
-    c = space.num_classes
-    s = np.zeros((e, e, e, c), dtype=np.float64)
-    q = np.zeros((e, e, e, c), dtype=np.float64)
-    present = np.zeros((e, e, e), dtype=bool)
-    ii, jj, kk = cand[:, 1], cand[:, 2], cand[:, 3]
-    s[ii, jj, kk] = rel_lg
-    q[ii, jj, kk] = q_lg
-    present[ii, jj, kk] = True
-
-    sw = space.swap_index()
+def _ensemble(
+    s: np.ndarray, q: np.ndarray, sw: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(V, Qc) over the trailing (E, E, E, C) axes of the rel (S) and
+    qualifier (Q) tensors; any leading axes are batch axes."""
+    n = s.ndim - 4
+    lead = tuple(range(n))
 
     def t(x: np.ndarray, perm: tuple[int, int, int]) -> np.ndarray:
-        return np.transpose(x, perm + (3,))
+        return np.transpose(x, lead + tuple(p + n for p in perm) + (n + 3,))
 
     # addition sequence mirrors run_re.py:1317-1386 exactly (non-associative
     # float sums must run in the same order for bit parity)
@@ -69,7 +65,75 @@ def ensemble_tensors(
     qc += t(s, (2, 0, 1))[..., sw]  # swap(S[j,k,i])
     qc += t(s, (1, 2, 0))           # S[k,i,j]
     qc += t(q, (2, 1, 0))[..., sw]  # swap(Q[k,j,i])
+    return v, qc
+
+
+def ensemble_tensors(
+    e: int,
+    cand: np.ndarray,      # (N, 10) from candidates.enumerate_triples
+    rel_lg: np.ndarray,    # (N, C) float64
+    q_lg: np.ndarray,      # (N, C) float64
+    space: LabelSpace,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Returns (V, Qc, present) dense tensors over entity index triples."""
+    c = space.num_classes
+    s = np.zeros((e, e, e, c), dtype=np.float64)
+    q = np.zeros((e, e, e, c), dtype=np.float64)
+    present = np.zeros((e, e, e), dtype=bool)
+    ii, jj, kk = cand[:, 1], cand[:, 2], cand[:, 3]
+    s[ii, jj, kk] = rel_lg
+    q[ii, jj, kk] = q_lg
+    present[ii, jj, kk] = True
+    v, qc = _ensemble(s, q, space.swap_index())
     return v, qc, present
+
+
+def _normalize_direction(
+    a1: np.ndarray, a2: np.ndarray, a3: np.ndarray,
+    pred: np.ndarray, q_pred: np.ndarray, space: LabelSpace,
+) -> np.ndarray:
+    """Direction normalization (run_re.py:1401-1416) as numpy masks, in
+    place over per-candidate entity slots and labels; returns the mask of
+    candidates the reference keeps."""
+    num_label = space.num_label
+    is_k = space.is_k()
+    is_r = space.is_r()
+
+    m = pred >= num_label
+    pred[m] = pred[m] - num_label + 1
+    a1[m], a2[m] = a2[m], a1[m].copy()
+
+    m = q_pred >= num_label
+    t1, t2, t3 = a3[m], a1[m].copy(), a2[m].copy()
+    a1[m], a2[m], a3[m] = t1, t2, t3
+    tmp = pred[m].copy()
+    pred[m] = q_pred[m] - num_label + 1
+    q_pred[m] = tmp
+
+    m = is_k[pred]
+    drop = m & is_k[q_pred]
+    m = m & ~drop
+    a2[m], a3[m] = a3[m], a2[m].copy()
+    tmp = pred[m].copy()
+    pred[m] = q_pred[m]
+    q_pred[m] = tmp
+
+    return ~(drop | (is_r[pred] & is_r[q_pred]))
+
+
+def _emit(
+    entities: np.ndarray, rows: np.ndarray, sc, qsc, a1, a2, a3, pred, q_pred,
+    label_list: list[str],
+) -> list[tuple]:
+    """NMS over the normalized candidates ``rows`` (in candidate order)."""
+    if rows.size == 0:
+        return []
+    spans = [tuple(int(x) for x in row) for row in entities]
+    return _nms([
+        (float(sc[w]), spans[a1[w]], spans[a2[w]], int(pred[w]),
+         float(qsc[w]), spans[a3[w]], int(q_pred[w]))
+        for w in rows
+    ], label_list)
 
 
 def _nms(results: list[tuple], label_list: list[str]) -> list[tuple]:
@@ -136,78 +200,6 @@ def _anchor_triples(e: int) -> tuple:
     return got
 
 
-def decode_sentence_fast(
-    entities: np.ndarray,
-    cand: np.ndarray,
-    rel_lg: np.ndarray,
-    q_lg: np.ndarray,
-    space: LabelSpace,
-    strict: bool = True,
-) -> list[tuple]:
-    """Vectorized decode for the full-grid case (cand covers all E^3
-    orderings and entity spans are distinct).  Anchors are exactly the
-    i<j<k index triples in lexicographic order (= first-encountered
-    orientation under the reference's insertion-ordered dict walk); the
-    direction normalization runs as numpy masks.  Bit-identical to
-    :func:`decode_sentence_arrays` (tests assert)."""
-    e = entities.shape[0]
-    if e < 3 or cand.shape[0] != e * e * e:
-        return decode_sentence_arrays(
-            entities, cand, rel_lg, q_lg, space, same_entity=False,
-            strict=strict)
-    v, qc, _present = ensemble_tensors(e, cand, rel_lg, q_lg, space)
-
-    ii, jj, kk = _anchor_triples(e)  # lexicographic anchor order
-
-    pred = np.argmax(v[ii, jj, kk], axis=-1)
-    q_pred = np.argmax(qc[ii, jj, kk], axis=-1)
-    keep = (pred > 0) & (q_pred > 0)
-    ii, jj, kk = ii[keep], jj[keep], kk[keep]
-    pred, q_pred = pred[keep], q_pred[keep]
-    if pred.size == 0:
-        return []
-
-    a1, a2, a3 = ii.copy(), jj.copy(), kk.copy()
-    num_label = space.num_label
-    is_k = space.is_k()
-    is_r = space.is_r()
-
-    m = pred >= num_label
-    pred[m] = pred[m] - num_label + 1
-    a1[m], a2[m] = a2[m], a1[m].copy()
-
-    m = q_pred >= num_label
-    t1, t2, t3 = a3[m], a1[m].copy(), a2[m].copy()
-    a1[m], a2[m], a3[m] = t1, t2, t3
-    tmp = pred[m].copy()
-    pred[m] = q_pred[m] - num_label + 1
-    q_pred[m] = tmp
-
-    m = is_k[pred]
-    drop = m & is_k[q_pred]
-    m = m & ~drop
-    a2[m], a3[m] = a3[m], a2[m].copy()
-    tmp = pred[m].copy()
-    pred[m] = q_pred[m]
-    q_pred[m] = tmp
-
-    drop = drop | (is_r[pred] & is_r[q_pred])
-    ok = ~drop
-    if not ok.any():
-        return []
-
-    sc = v[ii, jj, kk, pred]
-    qsc = qc[ii, jj, kk, q_pred]
-
-    spans = [tuple(int(x) for x in row) for row in entities]
-    results = [
-        (float(sc[t]), spans[a1[t]], spans[a2[t]], int(pred[t]),
-         float(qsc[t]), spans[a3[t]], int(q_pred[t]))
-        for t in np.nonzero(ok)[0]
-    ]
-    return _nms(results, space.label_list)
-
-
 def decode_sentences_batch(
     items: list,           # [(entities, cand, lo, hi), ...] per sentence
     rel_all: np.ndarray,   # (sum N_i, C) logits, sentence-sliced by lo:hi
@@ -217,132 +209,72 @@ def decode_sentences_batch(
     strict: bool = True,
     unidirect: bool = False,
 ) -> list:
-    """Batched twin of :func:`decode_sentence` over many sentences (r7).
+    """Decode many sentences; returns one preds list per input item, in
+    input order.  Each row is
+    (m1s, m1e, m2s, m2e, rel_name, m3s, m3e, qual_name, rel_score, q_score).
 
-    Sentences eligible for the vectorized fast path (full E^3 candidate
-    grid, same_entity off) are grouped by entity count and decoded as
-    ONE (B, E, E, E, C) tensor pipeline: in the full-grid case the
-    candidate rows are exactly lexicographic (i, j, k) order, so the
-    per-sentence scatter is a pure reshape, and every ensemble addition,
-    argmax, direction-normalization mask and score gather is the same
-    elementwise operation decode_sentence_fast performs — just across a
-    leading batch axis, so the ~30 numpy dispatches per sentence
-    amortize over the group.  np.nonzero flattens row-major, so within
-    each sentence candidate order (and therefore NMS input order) is
-    identical to the per-sentence path; outputs are bit-identical
-    (tests/test_decode_parity.py::test_batched_decode_matches).
-    Ineligible sentences fall back to the per-sentence decoders.
-    Returns one preds list per input item, in input order.
+    ``unidirect`` sentences go to :func:`decode_sentence_unidirect`;
+    ``same_entity`` sentences and those without the full E^3 candidate
+    grid (E < 3, pruned spans) go to :func:`decode_sentence_arrays`.  The
+    rest are grouped by entity count and decoded as ONE (B, E, E, E, C)
+    tensor pipeline: in the full-grid case the candidate rows are exactly
+    lexicographic (i, j, k) order, so the per-sentence scatter is a pure
+    reshape.  Anchors are the i<j<k index triples in lexicographic order
+    (= first-encountered orientation under the reference's
+    insertion-ordered dict walk); np.nonzero flattens row-major, so within
+    each sentence candidate order (and therefore NMS input order) is the
+    loop's.  Outputs are bit-identical to the loop
+    (tests/test_decode_parity.py).
     """
     out: list = [None] * len(items)
-    if same_entity or unidirect:
-        for ix, (ents, cand, lo, hi) in enumerate(items):
-            out[ix] = decode_sentence(
-                ents, cand, rel_all[lo:hi], q_all[lo:hi], space,
-                same_entity, strict, unidirect)
-        return out
     groups: dict[int, list[int]] = {}
     for ix, (ents, cand, lo, hi) in enumerate(items):
         e = ents.shape[0]
-        if e >= 3 and cand.shape[0] == e * e * e:
+        if unidirect:
+            out[ix] = decode_sentence_unidirect(
+                ents, cand, rel_all[lo:hi], q_all[lo:hi], space, same_entity)
+        elif not same_entity and e >= 3 and cand.shape[0] == e * e * e:
             groups.setdefault(e, []).append(ix)
         else:
             out[ix] = decode_sentence_arrays(
                 ents, cand, rel_all[lo:hi], q_all[lo:hi], space,
-                same_entity=False, strict=strict)
+                same_entity, strict)
 
     c = space.num_classes
     sw = space.swap_index()
-    num_label = space.num_label
-    is_k = space.is_k()
-    is_r = space.is_r()
     label_list = space.label_list
-
     for e, idxs in groups.items():
         nb = len(idxs)
-        e3 = e * e * e
-        s = np.empty((nb, e3, c), dtype=np.float64)
-        q = np.empty((nb, e3, c), dtype=np.float64)
+        s = np.empty((nb, e * e * e, c), dtype=np.float64)
+        q = np.empty((nb, e * e * e, c), dtype=np.float64)
         for b, ix in enumerate(idxs):
             _ents, _cand, lo, hi = items[ix]
             s[b] = rel_all[lo:hi]
             q[b] = q_all[lo:hi]
-        s = s.reshape(nb, e, e, e, c)
-        q = q.reshape(nb, e, e, e, c)
-
-        def t(x: np.ndarray, perm: tuple[int, int, int]) -> np.ndarray:
-            return np.transpose(
-                x, (0,) + tuple(p + 1 for p in perm) + (4,))
-
-        # identical term order to ensemble_tensors (bit parity)
-        v = s.copy()
-        v += t(s, (1, 0, 2))[..., sw]
-        v += t(q, (0, 2, 1))
-        v += t(q, (2, 0, 1))
-        v += t(q, (1, 2, 0))[..., sw]
-        v += t(s, (2, 1, 0))
-        qc = q.copy()
-        qc += t(q, (1, 0, 2))
-        qc += t(s, (0, 2, 1))
-        qc += t(s, (2, 0, 1))[..., sw]
-        qc += t(s, (1, 2, 0))
-        qc += t(q, (2, 1, 0))[..., sw]
+        v, qc = _ensemble(s.reshape(nb, e, e, e, c),
+                          q.reshape(nb, e, e, e, c), sw)
 
         ii, jj, kk = _anchor_triples(e)
         pred = np.argmax(v[:, ii, jj, kk, :], axis=-1)
         q_pred = np.argmax(qc[:, ii, jj, kk, :], axis=-1)
-        keep = (pred > 0) & (q_pred > 0)
-        bs, asel = np.nonzero(keep)  # row-major: per-sentence order kept
-        if bs.size == 0:
-            for ix in idxs:
-                out[ix] = []
-            continue
-        a1 = ii[asel].copy()
-        a2 = jj[asel].copy()
-        a3 = kk[asel].copy()
+        # row-major: per-sentence candidate order kept
+        bs, asel = np.nonzero((pred > 0) & (q_pred > 0))
+        iia, jja, kka = ii[asel], jj[asel], kk[asel]
+        a1, a2, a3 = iia.copy(), jja.copy(), kka.copy()
         pr = pred[bs, asel]
         qp = q_pred[bs, asel]
-
-        m = pr >= num_label
-        pr[m] = pr[m] - num_label + 1
-        a1[m], a2[m] = a2[m], a1[m].copy()
-
-        m = qp >= num_label
-        t1, t2, t3 = a3[m], a1[m].copy(), a2[m].copy()
-        a1[m], a2[m], a3[m] = t1, t2, t3
-        tmp = pr[m].copy()
-        pr[m] = qp[m] - num_label + 1
-        qp[m] = tmp
-
-        m = is_k[pr]
-        drop = m & is_k[qp]
-        m = m & ~drop
-        a2[m], a3[m] = a3[m], a2[m].copy()
-        tmp = pr[m].copy()
-        pr[m] = qp[m]
-        qp[m] = tmp
-
-        drop = drop | (is_r[pr] & is_r[qp])
-        okidx = np.nonzero(~drop)[0]
-
-        iia, jja, kka = ii[asel], jj[asel], kk[asel]
+        ok = np.nonzero(_normalize_direction(a1, a2, a3, pr, qp, space))[0]
+        # run_re.py:1417-1418 — scores index the BASE-orientation ensemble
+        # vectors at the direction-NORMALIZED labels, not at the argmax
         sc = v[bs, iia, jja, kka, pr]
         qsc = qc[bs, iia, jja, kka, qp]
 
-        bs_ok = bs[okidx]
+        bs_ok = bs[ok]
         for b, ix in enumerate(idxs):
-            lo_b = np.searchsorted(bs_ok, b, side="left")
-            hi_b = np.searchsorted(bs_ok, b, side="right")
-            if lo_b == hi_b:
-                out[ix] = []
-                continue
-            spans = [tuple(int(x) for x in row) for row in items[ix][0]]
-            results = [
-                (float(sc[w]), spans[a1[w]], spans[a2[w]], int(pr[w]),
-                 float(qsc[w]), spans[a3[w]], int(qp[w]))
-                for w in okidx[lo_b:hi_b]
-            ]
-            out[ix] = _nms(results, label_list)
+            rows = ok[np.searchsorted(bs_ok, b, side="left"):
+                      np.searchsorted(bs_ok, b, side="right")]
+            out[ix] = _emit(items[ix][0], rows, sc, qsc, a1, a2, a3, pr, qp,
+                            label_list)
     return out
 
 
@@ -355,7 +287,9 @@ def decode_sentence_arrays(
     same_entity: bool = False,
     strict: bool = True,
 ) -> list[tuple]:
-    """Decode one sentence.  Returns output_preds rows in emission order:
+    """Decode one sentence with the reference's loop — the reference
+    implementation the batched groups are tested against.  Returns
+    output_preds rows in emission order:
     (m1s, m1e, m2s, m2e, rel_name, m3s, m3e, qual_name, rel_score, q_score).
     """
     e = entities.shape[0]
@@ -444,64 +378,26 @@ def decode_sentence_unidirect(
     against this repo's own oracle transcription only.  Vectorized over
     the candidate rows in enumeration order (= the oracle dict's
     insertion order)."""
-    e = entities.shape[0]
-    n = cand.shape[0]
-    if e == 0 or n == 0:
+    if entities.shape[0] == 0 or cand.shape[0] == 0:
         return []
     ii, jj, kk = cand[:, 1], cand[:, 2], cand[:, 3]
     pred = np.argmax(rel_lg, axis=-1)
     q_pred = np.argmax(q_lg, axis=-1)
 
-    spans = [tuple(int(x) for x in row) for row in entities]
     keep = (pred > 0) & (q_pred > 0)
     if not same_entity:
-        sp = np.asarray(spans, dtype=np.int64)
         keep &= (
-            (sp[ii] != sp[jj]).any(axis=1)
-            & (sp[jj] != sp[kk]).any(axis=1)
-            & (sp[kk] != sp[ii]).any(axis=1))
+            (entities[ii] != entities[jj]).any(axis=1)
+            & (entities[jj] != entities[kk]).any(axis=1)
+            & (entities[kk] != entities[ii]).any(axis=1))
     rows = np.nonzero(keep)[0]
-    if rows.size == 0:
-        return []
-    a1, a2, a3 = ii[rows].copy(), jj[rows].copy(), kk[rows].copy()
-    pred, q_pred = pred[rows].copy(), q_pred[rows].copy()
-
-    num_label = space.num_label
-    is_k = space.is_k()
-    is_r = space.is_r()
-
-    m = pred >= num_label
-    pred[m] = pred[m] - num_label + 1
-    a1[m], a2[m] = a2[m], a1[m].copy()
-
-    m = q_pred >= num_label
-    t1, t2, t3 = a3[m], a1[m].copy(), a2[m].copy()
-    a1[m], a2[m], a3[m] = t1, t2, t3
-    tmp = pred[m].copy()
-    pred[m] = q_pred[m] - num_label + 1
-    q_pred[m] = tmp
-
-    m = is_k[pred]
-    drop = m & is_k[q_pred]
-    m = m & ~drop
-    a2[m], a3[m] = a3[m], a2[m].copy()
-    tmp = pred[m].copy()
-    pred[m] = q_pred[m]
-    q_pred[m] = tmp
-
-    drop = drop | (is_r[pred] & is_r[q_pred])
-    ok = ~drop
-    if not ok.any():
-        return []
-
+    a1, a2, a3 = ii[rows], jj[rows], kk[rows]
+    pred, q_pred = pred[rows], q_pred[rows]
+    ok = np.nonzero(_normalize_direction(a1, a2, a3, pred, q_pred, space))[0]
     sc = rel_lg[rows, pred]
     qsc = q_lg[rows, q_pred]
-    results = [
-        (float(sc[t]), spans[a1[t]], spans[a2[t]], int(pred[t]),
-         float(qsc[t]), spans[a3[t]], int(q_pred[t]))
-        for t in np.nonzero(ok)[0]
-    ]
-    return _nms(results, space.label_list)
+    return _emit(entities, ok, sc, qsc, a1, a2, a3, pred, q_pred,
+                 space.label_list)
 
 
 def decode_sentence(
@@ -514,13 +410,7 @@ def decode_sentence(
     strict: bool = True,
     unidirect: bool = False,
 ) -> list[tuple]:
-    """Dispatcher: vectorized fast path when its preconditions hold
-    (same_entity off + full candidate grid), reference loop otherwise;
-    ``unidirect=True`` selects the no-ensemble ablation decode."""
-    if unidirect:
-        return decode_sentence_unidirect(
-            entities, cand, rel_lg, q_lg, space, same_entity)
-    if not same_entity:
-        return decode_sentence_fast(entities, cand, rel_lg, q_lg, space, strict)
-    return decode_sentence_arrays(
-        entities, cand, rel_lg, q_lg, space, same_entity, strict)
+    """Decode one sentence: :func:`decode_sentences_batch` on one item."""
+    return decode_sentences_batch(
+        [(entities, cand, 0, cand.shape[0])], rel_lg, q_lg, space,
+        same_entity, strict, unidirect)[0]

@@ -1,9 +1,14 @@
 """Candidate scoring + decode — the two Arrow UDF families (SURVEY.md §2.9).
 
-Fused path (default for deterministic scorers)
-    One ``mapInPandas`` pass per turn row: enumerate span triples (C3),
-    score (M1-M5 stand-in), 6-permutation ensemble + direction normalize +
-    NMS (D2-D5), project fact texts (G1).  Logits never become Spark rows, so
+Both take the flat sentence contract ``plans.pipeline.prepare_sentences``
+emits (conv_id, turn_idx, text, m_starts, m_ends [, gold_relations]).
+
+Fused path (default for every scorer)
+    One ``mapInPandas`` pass per Arrow batch: enumerate span triples (C3),
+    score every candidate of the batch (M1-M5 stand-in) into one logit
+    buffer per head, decode the batch in one ``decode_sentences_batch``
+    call (6-permutation ensemble + direction normalize + NMS, D2-D5),
+    project fact texts (G1).  Logits never become Spark rows, so
     extraction is SHUFFLE-FREE end to end — scan → mapInPandas → facts.
     This is the 100 TB plan: throughput scales linearly with input splits and
     there is no wide dependency to skew.
@@ -75,7 +80,7 @@ def _make_tokenizer(cfg: PipelineConfig):
     raise ValueError(f"unknown tokenizer '{cfg.tokenizer}'")
 
 
-def _enumerate(cfg: PipelineConfig, ents: np.ndarray, tokens, tokenizer):
+def _enumerate(cfg: PipelineConfig, ents: np.ndarray, text: str, tokenizer):
     """Candidate enumeration under the configured tokenizer: identity uses
     the vectorized full-grid path; wordpiece maps the pruning bounds
     through token2subword prefix sums (run_re.py:490-491, 516-517)."""
@@ -84,7 +89,7 @@ def _enumerate(cfg: PipelineConfig, ents: np.ndarray, tokens, tokenizer):
     from text2nkg_spark.candidates import (
         enumerate_triples_subword, token2subword_array)
 
-    t2s = token2subword_array(list(tokens), tokenizer)
+    t2s = token2subword_array(text.split(" "), tokenizer)
     return enumerate_triples_subword(ents, cfg.max_seq_length, t2s)
 
 
@@ -107,9 +112,11 @@ def _sentence_logits(
     sent_idx: int,
     cand: np.ndarray,
     gold_rels: list | None,
-    entities: np.ndarray | None = None,
-    tokens: list[str] | None = None,
+    entities: np.ndarray,
+    text: str,
 ) -> tuple[np.ndarray, np.ndarray]:
+    """(rel, qual) float32 logits of one sentence's candidates under the
+    configured scorer."""
     triples = cand[:, 4:10]
     c = space.num_classes
     if cfg.scorer == "gold":
@@ -121,7 +128,7 @@ def _sentence_logits(
         qul = hash_logits(doc_id, sent_idx, triples, c, cfg.hash_seed, 1)
     elif cfg.scorer == "model":
         scorer = _worker_model_scorer(cfg, space)
-        rel, qul = scorer.score_sentence(tokens or [], entities, cand)
+        rel, qul = scorer.score_sentence(text.split(" "), entities, cand)
     else:
         raise NotImplementedError(f"unknown scorer '{cfg.scorer}'")
     if cfg.log_softmax:
@@ -154,70 +161,63 @@ def _gold_rel_tuples(rels) -> list:
     return out
 
 
-def _mention_array(mentions) -> np.ndarray:
-    if mentions is None or len(mentions) == 0:
-        return np.empty((0, 2), dtype=np.int64)
-    rows = [
-        (int(m["start"]), int(m["end"])) if isinstance(m, dict)
-        else (int(m.start), int(m.end))
-        for m in mentions
-    ]
-    return np.asarray(rows, dtype=np.int64)
-
-
-def _flat_mention_array(starts, ends) -> np.ndarray:
-    """(starts, ends) int arrays -> (E, 2) span matrix (fast Arrow path)."""
+def _entity_spans(starts, ends) -> np.ndarray:
+    """(m_starts, m_ends) int arrays -> (E, 2) span matrix."""
     if starts is None or len(starts) == 0:
         return np.empty((0, 2), dtype=np.int64)
     return np.column_stack(
         [np.asarray(starts, dtype=np.int64), np.asarray(ends, dtype=np.int64)])
 
 
+def _use_gold(df, cfg: PipelineConfig) -> bool:
+    """True for the gold scorer, whose input must carry ``gold_relations``
+    (``prepare_sentences`` with a gold table); fails at plan time, not
+    inside an executor."""
+    if cfg.scorer != "gold":
+        return False
+    if "gold_relations" not in df.columns:
+        raise ValueError(
+            "scorer='gold' needs a gold_relations column: build the input "
+            "with prepare_sentences(transcripts, gold)")
+    return True
+
+
 def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
     """Fused scan→facts extraction.
 
     Input columns (flat Arrow-friendly contract — struct/token arrays cost
-    ~2x in Arrow->pandas conversion): conv_id, turn_idx, text (string),
-    m_starts (array<int>), m_ends (array<int>); plus gold_relations when
-    cfg.scorer == 'gold'.  The legacy (tokens, mentions) contract is also
-    accepted.
+    ~2x in Arrow->pandas conversion, see ``plans.pipeline.
+    prepare_sentences``): conv_id, turn_idx, text (string), m_starts
+    (array<int>), m_ends (array<int>); plus gold_relations when
+    cfg.scorer == 'gold' (ValueError here when it is missing).
+
+    Per Arrow batch: enumerate every sentence's candidates, fill one
+    float32 (N, C) logit buffer per head, then decode the whole batch in
+    one ``decode_sentences_batch`` call.
     """
-    use_gold = cfg.scorer == "gold"
-    flat = "m_starts" in df.columns
-    identity = cfg.tokenizer == "identity"
-    strict = identity  # pruned orderings only exist under wordpiece
+    use_gold = _use_gold(df, cfg)
+    strict = cfg.tokenizer == "identity"  # pruned orderings: wordpiece only
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tokenizer = _make_tokenizer(cfg)
+        c = space.num_classes
         for pdf in batches:
             out: list[tuple] = []
             conv_ids = pdf["conv_id"].to_numpy()
             turn_idxs = pdf["turn_idx"].to_numpy()
-            if flat:
-                text_col = pdf["text"].to_numpy()
-                starts_col = pdf["m_starts"].to_numpy()
-                ends_col = pdf["m_ends"].to_numpy()
-            else:
-                tokens_col = pdf["tokens"].to_numpy()
-                mentions_col = pdf["mentions"].to_numpy()
+            text_col = pdf["text"].to_numpy()
+            starts_col = pdf["m_starts"].to_numpy()
+            ends_col = pdf["m_ends"].to_numpy()
             gold_col = pdf["gold_relations"].to_numpy() if use_gold else None
 
             # phase 1 — enumerate all sentences in the batch
             sent: list[tuple] = []  # (row, doc_id, ents, cand, lo, hi)
             pos = 0
             for r in range(len(pdf)):
-                if flat:
-                    ents = _flat_mention_array(starts_col[r], ends_col[r])
-                else:
-                    ents = _mention_array(mentions_col[r])
+                ents = _entity_spans(starts_col[r], ends_col[r])
                 if ents.shape[0] == 0:
                     continue
-                if identity:
-                    cand = enumerate_triples(ents, cfg.max_seq_length)
-                else:
-                    toks_r = (text_col[r].split(" ") if flat
-                              else list(tokens_col[r]))
-                    cand = _enumerate(cfg, ents, toks_r, tokenizer)
+                cand = _enumerate(cfg, ents, text_col[r], tokenizer)
                 if cand.shape[0] == 0:
                     continue
                 sent.append((r, stable_doc_id(conv_ids[r]), ents, cand,
@@ -227,26 +227,25 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
                 yield _empty_fact_frame()
                 continue
 
-            # phase 2 — score the whole batch vectorized, in cache-sized
-            # slices: every op is elementwise/row-wise so values are
-            # identical, but a ~32k-candidate working set (~5 MB) stays
-            # L2/L3-resident instead of streaming tens of MB through the
-            # shared memory bus per batch — measurably better multi-worker
-            # scaling on bandwidth-bound executors
+            # phase 2 — score into one float32 (N, C) buffer per head
+            rel_all = np.empty((pos, c), dtype=np.float32)
+            q_all = np.empty((pos, c), dtype=np.float32)
             if cfg.scorer == "hash":
+                # the whole batch vectorized, in cache-sized slices: every
+                # op is elementwise/row-wise so values are identical, but
+                # a ~32k-candidate working set (~5 MB) stays L2/L3-resident
+                # instead of streaming tens of MB through the shared
+                # memory bus per batch — measurably better multi-worker
+                # scaling on bandwidth-bound executors
                 all_triples = np.concatenate([s[3][:, 4:10] for s in sent])
                 doc_arr = np.concatenate(
                     [np.full(s[5] - s[4], s[1], dtype=np.int64) for s in sent])
                 sent_arr = np.concatenate(
                     [np.full(s[5] - s[4], int(turn_idxs[s[0]]), dtype=np.int64)
                      for s in sent])
-                c = space.num_classes
-                n_all = all_triples.shape[0]
-                rel_all = np.empty((n_all, c), dtype=np.float32)
-                q_all = np.empty((n_all, c), dtype=np.float32)
                 step = 32768
-                for lo_ in range(0, n_all, step):
-                    sl = slice(lo_, min(lo_ + step, n_all))
+                for lo_ in range(0, pos, step):
+                    sl = slice(lo_, min(lo_ + step, pos))
                     r_ = hash_logits_batch(
                         doc_arr[sl], sent_arr[sl], all_triples[sl], c,
                         cfg.hash_seed, 0)
@@ -259,38 +258,24 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
                     rel_all[sl] = r_
                     q_all[sl] = q_
             else:
-                rel_all = q_all = None
-
-            # phase 3 — decode: hash-scored batches go through the
-            # batched fast decoder (one tensor pipeline per entity-count
-            # group — bit-identical outputs, see decode_sentences_batch),
-            # other scorers keep the per-sentence loop
-            batched = None
-            if rel_all is not None:
-                batched = decode_sentences_batch(
-                    [(s_[2], s_[3], s_[4], s_[5]) for s_ in sent],
-                    rel_all, q_all, space,
-                    same_entity=cfg.same_entity, strict=strict,
-                    unidirect=cfg.eval_unidirect)
-            for si, (r, doc_id, ents, cand, lo, hi) in enumerate(sent):
-                conv_id = conv_ids[r]
-                turn_idx = int(turn_idxs[r])
-                if batched is not None:
-                    preds = batched[si]
-                else:
+                for r, doc_id, ents, cand, lo, hi in sent:
                     gold = _gold_rel_tuples(gold_col[r]) if use_gold else None
-                    toks = ((text_col[r].split(" ") if flat
-                             else list(tokens_col[r]))
-                            if cfg.scorer == "model" else None)
-                    rel_lg, q_lg = _sentence_logits(
-                        cfg, space, doc_id, turn_idx, cand, gold, ents, toks)
-                    preds = decode_sentence(
-                        ents, cand, rel_lg, q_lg, space, cfg.same_entity,
-                        strict=strict, unidirect=cfg.eval_unidirect)
+                    rel_all[lo:hi], q_all[lo:hi] = _sentence_logits(
+                        cfg, space, doc_id, int(turn_idxs[r]), cand, gold,
+                        ents, text_col[r])
+
+            # phase 3 — decode the whole batch (one tensor pipeline per
+            # entity-count group, see decode_sentences_batch)
+            batched = decode_sentences_batch(
+                [s_[2:] for s_ in sent], rel_all, q_all, space,
+                same_entity=cfg.same_entity, strict=strict,
+                unidirect=cfg.eval_unidirect)
+            for (r, *_), preds in zip(sent, batched):
                 if not preds:
                     continue
-                tokens = (text_col[r].split(" ") if flat
-                          else list(tokens_col[r]))
+                conv_id = conv_ids[r]
+                turn_idx = int(turn_idxs[r])
+                tokens = text_col[r].split(" ")
                 for pi, p in enumerate(preds):
                     m1s, m1e, m2s, m2e, rel, m3s, m3e, qual, sc, qsc = p
                     out.append(
@@ -352,45 +337,33 @@ def score_candidates(df, cfg: PipelineConfig, space: LabelSpace):
     scale, follow with ``.repartition(N, 'conv_id', 'turn_idx', 'sub_lo')``
     before an expensive model scorer.
     """
-    use_gold = cfg.scorer == "gold"
+    use_gold = _use_gold(df, cfg)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tokenizer = _make_tokenizer(cfg)
         for pdf in batches:
             frames: list[pd.DataFrame] = []
-            flat = "m_starts" in pdf.columns
             ranged = "sub_lo" in pdf.columns
             gold_col = pdf["gold_relations"] if use_gold else None
             for r in range(len(pdf)):
                 conv_id = pdf["conv_id"].iat[r]
                 turn_idx = int(pdf["turn_idx"].iat[r])
-                if flat:
-                    ents = _flat_mention_array(
-                        pdf["m_starts"].iat[r], pdf["m_ends"].iat[r])
-                else:
-                    ents = _mention_array(pdf["mentions"].iat[r])
+                text = pdf["text"].iat[r]
+                ents = _entity_spans(
+                    pdf["m_starts"].iat[r], pdf["m_ends"].iat[r])
                 if ents.shape[0] == 0:
                     continue
-                if cfg.tokenizer == "identity":
-                    cand = enumerate_triples(ents, cfg.max_seq_length)
-                else:
-                    toks_r = (pdf["text"].iat[r].split(" ") if flat
-                              else list(pdf["tokens"].iat[r]))
-                    cand = _enumerate(cfg, ents, toks_r, tokenizer)
+                cand = _enumerate(cfg, ents, text, tokenizer)
                 if ranged:
                     lo = int(pdf["sub_lo"].iat[r])
                     hi = int(pdf["sub_hi"].iat[r])
                     cand = cand[(cand[:, 1] >= lo) & (cand[:, 1] < hi)]
                 if cand.shape[0] == 0:
                     continue
-                doc_id = stable_doc_id(conv_id)
                 gold = _gold_rel_tuples(gold_col.iat[r]) if use_gold else None
-                toks = None
-                if cfg.scorer == "model":
-                    toks = (pdf["text"].iat[r].split(" ") if flat
-                            else list(pdf["tokens"].iat[r]))
                 rel_lg, q_lg = _sentence_logits(
-                    cfg, space, doc_id, turn_idx, cand, gold, ents, toks)
+                    cfg, space, stable_doc_id(conv_id), turn_idx, cand, gold,
+                    ents, text)
                 f = pd.DataFrame(
                     cand,
                     columns=["cand_idx", "i", "j", "k", "m1s", "m1e", "m2s",

@@ -6,8 +6,9 @@ plugs an NER model into the scoring UDF instead — see operators/scoring.py).
 
 Two equivalent implementations, both shuffle-free per input row:
 
-* ``detect_mentions`` — higher-order-function fold (``aggregate``) over the
-  token array: zero row explosion, stays inside whole-stage codegen.  This is
+* ``detect_mentions`` — one higher-order-function fold (``aggregate``, a
+  single SQL string for every predicate) over the token array's marker
+  indices: zero row explosion, stays inside whole-stage codegen.  This is
   the scale path: no 30x token-explode shuffle, no window function.
 * ``detect_mentions_exploded`` — classic posexplode + window + groupBy
   formulation used as a cross-check oracle in tests (and as the DuckDB-SQL
@@ -32,18 +33,18 @@ def with_tokens(turns: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# The identical runs-fold as ONE SQL string for the DEFAULT predicate:
-# the lambda-Column builder below costs hundreds of py4j round-trips of
-# DRIVER-side construction per query (~0.2-0.5 s, cores-independent —
-# it directly depresses the measured N->4N efficiency of short jobs),
-# where a SQL string parses JVM-side in one call (~0.08 s).  Both forms
-# resolve to the same analyzed expression; results and schema are
-# identical (exceptAll both ways == 0; the exploded-formulation parity
-# tests cover this path).
-_RUNS_FOLD_DEFAULT_SQL = """
+# The runs-fold as ONE SQL string over a marker-index array: a
+# lambda-Column builder costs hundreds of py4j round-trips of DRIVER-side
+# construction per query (~0.2-0.5 s, cores-independent — it directly
+# depresses the measured N->4N efficiency of short jobs), where a SQL
+# string parses JVM-side in one call (~0.08 s).  The fold walks MARKER
+# POSITIONS ONLY (sparse — typically a handful per turn), extending the
+# last run when the next marker index is contiguous; the accumulator-array
+# copies are bounded by the run count, so it beats any formulation that
+# touches every token.
+_RUNS_FOLD_SQL = """
 aggregate(
-  filter(transform(tokens, (t, i) -> IF(startswith(t, 'ent'), i, -1)),
-         i -> i >= 0),
+  {markers},
   CAST(array() AS array<struct<start:int,end:int>>),
   (acc, i) -> IF(size(acc) > 0
                  AND element_at(acc, -1).end = CAST(i AS INT) - 1,
@@ -54,60 +55,34 @@ aggregate(
                                    'end', CAST(i AS INT))))))
 """
 
+# marker indices of the DEFAULT predicate (synthetic ``ent`` prefix)
+_DEFAULT_MARKERS_SQL = (
+    "filter(transform(tokens, (t, i) -> IF(startswith(t, 'ent'), i, -1)), "
+    "i -> i >= 0)")
+
 
 def detect_mentions(
     turns: DataFrame, text_col: str = "text", predicate=None
 ) -> DataFrame:
     """Adds ``mentions: array<struct<start:int, end:int>>`` (inclusive ends).
 
-    Single-pass fold over the token array: accumulate runs of marker tokens,
-    extending the last run when the next marker index is contiguous.
-    ``predicate`` (Column -> Column bool) selects marker tokens; defaults to
-    the synthetic ``ent`` prefix (built as one SQL string — see
-    ``_RUNS_FOLD_DEFAULT_SQL``; custom predicates use the lambda builder).
+    Single-pass fold over the marker indices of the token array (see
+    ``_RUNS_FOLD_SQL``).  ``predicate`` (Column -> Column bool) selects
+    marker tokens; the default is the synthetic ``ent`` prefix, all SQL.
+    A custom predicate builds only the marker-index array as a lambda
+    Column; the fold is the same SQL string.
     """
     df = with_tokens(turns, text_col)
     if predicate is None:
-        return df.withColumn("mentions", F.expr(_RUNS_FOLD_DEFAULT_SQL))
-    pred = predicate
-    # fold over MARKER POSITIONS ONLY (sparse — typically a handful per
-    # turn), extending the last run when the next marker index is
-    # contiguous.  The accumulator-array copies are bounded by the run
-    # count, so the fold beats any formulation that touches every token.
-    df = df.withColumn(
-        "_mi",
-        F.filter(
-            F.transform(
-                "tokens", lambda t, i: F.when(pred(t), i).otherwise(F.lit(-1))),
-            lambda i: i >= 0,
-        ),
-    )
-    runs = F.aggregate(
-        F.col("_mi"),
-        F.array().cast("array<struct<start:int,end:int>>"),
-        lambda acc, i: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1)["end"] == i.cast("int") - 1),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(
-                    F.struct(
-                        F.element_at(acc, -1)["start"].alias("start"),
-                        i.cast("int").alias("end"),
-                    )
-                ),
-            ),
-        ).otherwise(
-            F.concat(
-                acc,
-                F.array(
-                    F.struct(i.cast("int").alias("start"),
-                             i.cast("int").alias("end"))
-                ),
-            )
-        ),
-    )
-    return df.withColumn("mentions", runs).drop("_mi")
+        return df.withColumn("mentions", F.expr(
+            _RUNS_FOLD_SQL.format(markers=_DEFAULT_MARKERS_SQL)))
+    df = df.withColumn("_mi", F.filter(
+        F.transform(
+            "tokens",
+            lambda t, i: F.when(predicate(t), i).otherwise(F.lit(-1))),
+        lambda i: i >= 0))
+    return df.withColumn("mentions", F.expr(
+        _RUNS_FOLD_SQL.format(markers="_mi"))).drop("_mi")
 
 
 def detect_mentions_exploded(

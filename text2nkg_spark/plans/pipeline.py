@@ -133,20 +133,24 @@ def run_pipeline(
     space = space or default_label_space()
     man = StageManifest(out_root)
     fp = input_fingerprint(transcripts)
+    # the gold table is an input too: of `sentences` (so of every fp2
+    # stage) when the gold scorer joins it, and of `metrics` when given
+    fp_gold = "" if gold is None else f"|gold={input_fingerprint(gold)}"
+    gold_in = gold if cfg.scorer == "gold" else None
+    fp_sents = fp if gold_in is None else fp + fp_gold
 
     sents = man.run_stage(
-        spark, "sentences", fp,
+        spark, "sentences", fp_sents,
         # pin the stage's write parallelism: the parquet this stage emits
         # becomes the predictions UDF's input splits, and a tiny
         # AQE-coalesced write (1 file) would single-thread the scorer
         lambda: prepare_sentences(
-            transcripts, gold if cfg.scorer == "gold" else None,
-            udf_partitions=cfg.shuffle_partitions))
+            transcripts, gold_in, udf_partitions=cfg.shuffle_partitions))
 
     # every config field that shapes emitted predictions must be in the
     # resume key, or a config change silently serves stale parquet
     fp2 = "|".join(str(x) for x in (
-        fp, cfg.scorer, cfg.hash_seed, space.d, cfg.tokenizer,
+        fp_sents, cfg.scorer, cfg.hash_seed, space.d, cfg.tokenizer,
         cfg.wordpiece_piece_len, cfg.model_checkpoint, cfg.model_variant,
         cfg.max_seq_length, cfg.max_pair_length, cfg.same_entity,
         cfg.log_softmax, cfg.gold_weight, cfg.eval_unidirect))
@@ -240,7 +244,7 @@ def run_pipeline(
         # the NER mode changes which stages exist, so it must be in THIS
         # resume key too (fp2 deliberately excludes it — it cannot change
         # predictions — but the metrics table lists stage rows)
-        f"{fp2}|gold={gold is not None}|ner={cfg.use_ner_results}",
+        f"{fp2}{fp_gold}|ner={cfg.use_ner_results}",
         build_metrics)
 
     out = {

@@ -5,9 +5,9 @@ this module is the graft's forward-looking ingest path: the same extraction
 dataflow running incrementally over arriving transcript files.
 
 * ``stream_transcripts``      — file-source readStream with explicit schema.
-* ``stream_extract_facts``    — the fused extraction UDF applied to the
-  stream (mapInPandas is fully supported on streaming DataFrames; the
-  pipeline stays stateless, so no state store is involved).
+* ``stream_extract_facts``    — the batch builder ``plans.pipeline.extract``
+  applied to the stream (mapInPandas is fully supported on streaming
+  DataFrames; the pipeline stays stateless, so no state store is involved).
 * ``windowed_turn_counts``    — watermarked tumbling-window aggregation
   (late data beyond the watermark is dropped, the standard pattern).
 * ``running_conv_stats``      — custom stateful operator via
@@ -40,11 +40,9 @@ def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
 
 
 def stream_extract_facts(stream: DataFrame, cfg, space) -> DataFrame:
-    from text2nkg_spark.operators.extraction import extract_facts_fused
-    from text2nkg_spark.plans.pipeline import prepare_sentences
+    from text2nkg_spark.plans.pipeline import extract
 
-    sents = prepare_sentences(stream)
-    return extract_facts_fused(sents, cfg, space)
+    return extract(stream, cfg, space)
 
 
 def windowed_turn_counts(
