@@ -2271,7 +2271,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---- DuckDB twins of the md5-derived hash primitives ----------------------
 # 52-bit hash = first 13 hex chars of md5, parsed by digit-sum (every value
 # is exactly float64-representable, so CAST is exact); mirrors
-# text2nkg_spark.operators.similarity.md5_hash52 bit-for-bit.
+# text2nkg_spark.plans.manifest.md5_hash52 bit-for-bit.
 
 _CENTER_52 = 1 << 51
 

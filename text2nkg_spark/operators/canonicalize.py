@@ -17,7 +17,10 @@ Everything is native Spark SQL:
 * components — alternating star iterations, each one self-join + groupBy,
   with ``localCheckpoint`` every few rounds to cut lineage.  Iteration count
   is O(log n) — at 10^12 mentions each round is a shuffle sized by the edge
-  list, which LSH keeps near-linear in input.
+  list, which LSH keeps near-linear in input;
+* entities — one ``entity_rollup`` aggregate over the mention->entity join,
+  shared by the driver-side and distributed branches and by
+  ``run_pipeline``'s ``entities`` stage.
 """
 
 from __future__ import annotations
@@ -387,6 +390,19 @@ def connected_components(
     return comp.unionByName(roots).dropDuplicates(["node"])
 
 
+def entity_rollup(mention_to_entity: DataFrame) -> DataFrame:
+    """(entity_id, canonical_surface, n_surfaces, n_mentions) over a
+    mention->entity join: canonical = the min surface, n_surfaces its
+    distinct surfaces, n_mentions its mentions.  The one entities
+    aggregate of both ``canonicalize_entities`` branches and of
+    ``run_pipeline``'s ``entities`` stage."""
+    return mention_to_entity.groupBy("entity_id").agg(
+        F.min("surface").alias("canonical_surface"),
+        F.countDistinct("surface").alias("n_surfaces"),
+        F.count(F.lit(1)).alias("n_mentions"),
+    )
+
+
 def canonicalize_entities(
     mention_surfaces_df: DataFrame,
     jaccard_threshold: float = 0.6,
@@ -410,28 +426,20 @@ def canonicalize_entities(
     # lexicographically-min surface, so entity_id doubles as a canonical
     # key and the DuckDB oracle reproduces it with plain string mins
     #
-    # Size-adaptive fused fast path: small vocabularies (the common case —
+    # Size-adaptive fast path: small vocabularies (the common case —
     # distinct SURFACES grow far slower than mentions) run LSH + union-find
-    # AND the entities aggregate entirely driver-side from ONE bounded
-    # Spark job: the per-surface mention-count aggregate is exactly the
-    # vocabulary (distinct surfaces) plus the only number the entities
-    # rollup needs beyond it (n_mentions = sum of per-surface counts,
-    # n_surfaces = surfaces per component, canonical = min surface).  The
-    # previous shape paid two localCheckpoint jobs + a distinct-probe
-    # collect + a distributed groupBy — ~9 Spark jobs where this is ~2
-    # (measured 13 s -> ~2 s for the entities entry under a contended
-    # driver; semantics are bit-identical to the distributed path, which
-    # tests/test_canonicalize.py asserts on both layers).
+    # driver-side from ONE bounded distinct-surface collect, then share the
+    # distributed branch's tail: the mention->entity join and the one
+    # ``entity_rollup`` (tests/test_canonicalize.py asserts both branches
+    # emit identical rows).
     spark = mention_surfaces_df.sparkSession
     head = (
-        mention_surfaces_df.groupBy("surface")
-        .agg(F.count(F.lit(1)).alias("_n"))
+        mention_surfaces_df.select("surface").distinct()
         .limit(local_vocab_threshold + 1).collect()
     ) if local_vocab_threshold > 0 else []
     small = local_vocab_threshold > 0 and len(head) <= local_vocab_threshold
     if small:
         surfaces = [r[0] for r in head]
-        n_mentions = {r[0]: r[1] for r in head}
         # shared _SHINGLE_N/_LSH_SEED/_LSH_MAX_BUCKET constants — the
         # same values the lsh_candidate_pairs signature defaults to, so
         # the two branches cannot drift apart
@@ -442,28 +450,10 @@ def canonicalize_entities(
         sc_rows = [(s, roots.get(s, s)) for s in surfaces if s is not None]
         surf_comp = spark.createDataFrame(
             sc_rows or [], "surface string, entity_id string")
-        # entities rollup driver-side: identical rows to the distributed
-        # groupBy over the mention->entity join (NULL surfaces never join,
-        # so they are excluded on both paths)
-        agg: dict[str, list] = {}
-        for s, eid in sc_rows:
-            a = agg.get(eid)
-            if a is None:
-                agg[eid] = [s, 1, int(n_mentions[s])]
-            else:
-                if s < a[0]:
-                    a[0] = s
-                a[1] += 1
-                a[2] += int(n_mentions[s])
-        ent_rows = [(eid, a[0], a[1], a[2]) for eid, a in agg.items()]
-        entities = spark.createDataFrame(
-            ent_rows or [],
-            "entity_id string, canonical_surface string, "
-            "n_surfaces long, n_mentions long")
-        # m2e stays LAZY: one pass over the mention stream when (and only
-        # when) a consumer acts on it — entities above no longer needs it
+        # lazy: one pass over the mention stream when a consumer acts on
+        # it (NULL surfaces never join, on either branch)
         m2e = mention_surfaces_df.join(F.broadcast(surf_comp), "surface")
-        return {"entities": entities, "mention_to_entity": m2e,
+        return {"entities": entity_rollup(m2e), "mention_to_entity": m2e,
                 "surface_to_entity": surf_comp, "small_vocab": True}
     # distributed path: materialize the surface stream once — three
     # consumers read it (the CC edge build, the surface->component join,
@@ -493,15 +483,7 @@ def canonicalize_entities(
     # the distributed branch's surface->entity frame can be arbitrarily
     # large at scale and joins normally (never an unconditional broadcast)
     m2e = mention_surfaces_df.join(surf_comp, "surface")
-    entities = (
-        m2e.groupBy("entity_id")
-        .agg(
-            F.min("surface").alias("canonical_surface"),
-            F.countDistinct("surface").alias("n_surfaces"),
-            F.count(F.lit(1)).alias("n_mentions"),
-        )
-    )
-    return {"entities": entities, "mention_to_entity": m2e,
+    return {"entities": entity_rollup(m2e), "mention_to_entity": m2e,
             "surface_to_entity": surf_comp, "small_vocab": small}
 
 

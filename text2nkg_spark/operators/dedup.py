@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 # (canonicalize) and are shared from there
 from text2nkg_spark.operators.canonicalize import (  # noqa: F401
     cap_bucket_width, exploded_min_md5)
-from text2nkg_spark.operators.similarity import hyperplane_bucket, md5_hash52
+from text2nkg_spark.operators.similarity import hyperplane_bucket
+from text2nkg_spark.plans.manifest import md5_hash52
 
 
 # The one whitespace definition, pinned to an explicit class: Java's \s

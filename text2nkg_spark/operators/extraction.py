@@ -1,17 +1,24 @@
 """Candidate scoring + decode — the two Arrow UDF families (SURVEY.md §2.9).
 
 Both take the flat sentence contract ``plans.pipeline.prepare_sentences``
-emits (conv_id, turn_idx, text, m_starts, m_ends [, gold_relations]).
+emits (conv_id, turn_idx, text, m_starts, m_ends [, gold_relations]) and
+share one body per Arrow batch, differing only in what they do with its
+logits:
+
+* phase 1, ``_sentence_batch`` — enumerate every sentence's span triples
+  (C3), subject-range filtered when ``split_dense_sentences`` added
+  ``sub_lo``/``sub_hi``;
+* phase 2, ``_batch_logits`` — score every candidate of the batch (M1-M5
+  stand-in) into one float32 logit buffer per head: hash in cache-sized
+  vectorized slices, gold/model per sentence (``_sentence_logits``).
 
 Fused path (default for every scorer)
-    One ``mapInPandas`` pass per Arrow batch: enumerate span triples (C3),
-    score every candidate of the batch (M1-M5 stand-in) into one logit
-    buffer per head, decode the batch in one ``decode_sentences_batch``
-    call (6-permutation ensemble + direction normalize + NMS, D2-D5),
-    project fact texts (G1).  Logits never become Spark rows, so
-    extraction is SHUFFLE-FREE end to end — scan → mapInPandas → facts.
-    This is the 100 TB plan: throughput scales linearly with input splits and
-    there is no wide dependency to skew.
+    ``extract_facts_fused`` decodes the batch in one
+    ``decode_sentences_batch`` call (6-permutation ensemble + direction
+    normalize + NMS, D2-D5) and projects fact texts (G1).  Logits never
+    become Spark rows, so extraction is SHUFFLE-FREE end to end — scan →
+    mapInPandas → facts.  This is the 100 TB plan: throughput scales
+    linearly with input splits and there is no wide dependency to skew.
 
 Two-stage path (for expensive model scorers + skew salting)
     ``score_candidates`` emits one row per span triple with logit arrays —
@@ -21,9 +28,10 @@ Two-stage path (for expensive model scorers + skew salting)
     (``applyInPandas``) and runs the identical decode core.  Tests assert the
     two paths emit byte-identical facts.
 
-Scorers are deterministic numpy (text2nkg_spark/scoring_core.py); a real
-BERT scorer drops into ``score_candidates``'s batch loop (gated import —
-torch/transformers are not shipped here).
+Both refuse a non-hyperrelation ``nary_schema`` at plan time
+(``extraction_multi.extract_facts_multi`` serves the others).  Scorers are
+deterministic numpy (scoring_core.py) or the packed-marker ``ModelScorer``,
+loaded once per python worker (``_worker_model_scorer``).
 """
 
 from __future__ import annotations
@@ -39,7 +47,7 @@ from text2nkg_spark.decode_core import (
     decode_sentence, decode_sentences_batch)
 from text2nkg_spark.labels import LabelSpace
 from text2nkg_spark.scoring_core import (
-    gold_logits, gold_orderings, hash_logits, hash_logits_batch, log_softmax)
+    gold_logits, gold_orderings, hash_logits_batch, log_softmax)
 
 FACT_SCHEMA = (
     "conv_id string, turn_idx int, pred_idx int, "
@@ -93,15 +101,20 @@ def _enumerate(cfg: PipelineConfig, ents: np.ndarray, text: str, tokenizer):
     return enumerate_triples_subword(ents, cfg.max_seq_length, t2s)
 
 
-def _worker_model_scorer(cfg: PipelineConfig, space: LabelSpace):
+def _worker_model_scorer(cfg: PipelineConfig, num_classes: int):
+    """The worker's ModelScorer for this config: every model-scored UDF
+    (both extraction UDFs, ``predicted_ner_table``, the multi-schema
+    ``score_heads``) loads its weights through here.  ``num_classes`` is
+    ``score_sentence``'s output width; the multi-schema heads pass their
+    widths explicitly, so any cached width serves them."""
     from text2nkg_spark.operators.model_scorer import ModelScorer
 
     key = (cfg.model_checkpoint, cfg.max_seq_length, cfg.max_pair_length,
-           space.num_classes, cfg.model_variant)
+           num_classes, cfg.model_variant)
     if key not in _WORKER_SCORERS:
         _WORKER_SCORERS[key] = ModelScorer(
             cfg.model_checkpoint, cfg.max_seq_length, cfg.max_pair_length,
-            space.num_classes, variant=cfg.model_variant)
+            num_classes, variant=cfg.model_variant)
     return _WORKER_SCORERS[key]
 
 
@@ -116,21 +129,16 @@ def _sentence_logits(
     text: str,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(rel, qual) float32 logits of one sentence's candidates under the
-    configured scorer."""
-    triples = cand[:, 4:10]
+    gold or model scorer (hash scores whole batches in ``_batch_logits``)."""
     c = space.num_classes
     if cfg.scorer == "gold":
         gi = gold_orderings(gold_rels or [], space.label_map())
         rel, qul = gold_logits(
-            doc_id, sent_idx, triples, c, gi, cfg.hash_seed, cfg.gold_weight)
-    elif cfg.scorer == "hash":
-        rel = hash_logits(doc_id, sent_idx, triples, c, cfg.hash_seed, 0)
-        qul = hash_logits(doc_id, sent_idx, triples, c, cfg.hash_seed, 1)
-    elif cfg.scorer == "model":
-        scorer = _worker_model_scorer(cfg, space)
-        rel, qul = scorer.score_sentence(text.split(" "), entities, cand)
+            doc_id, sent_idx, cand[:, 4:10], c, gi, cfg.hash_seed,
+            cfg.gold_weight)
     else:
-        raise NotImplementedError(f"unknown scorer '{cfg.scorer}'")
+        rel, qul = _worker_model_scorer(cfg, c).score_sentence(
+            text.split(" "), entities, cand)
     if cfg.log_softmax:
         rel = log_softmax(rel)
         qul = log_softmax(qul)
@@ -169,10 +177,15 @@ def _entity_spans(starts, ends) -> np.ndarray:
         [np.asarray(starts, dtype=np.int64), np.asarray(ends, dtype=np.int64)])
 
 
-def _use_gold(df, cfg: PipelineConfig) -> bool:
-    """True for the gold scorer, whose input must carry ``gold_relations``
-    (``prepare_sentences`` with a gold table); fails at plan time, not
-    inside an executor."""
+def _check_input(df, cfg: PipelineConfig) -> bool:
+    """Plan-time check shared by both UDFs, so a bad input or config fails
+    on the driver, not inside an executor.  Returns whether the gold
+    scorer reads ``gold_relations``."""
+    if cfg.nary_schema != "hyperrelation":
+        raise ValueError(
+            f"nary_schema={cfg.nary_schema!r}: this path extracts "
+            "hyperrelation facts only; use extraction_multi."
+            "extract_facts_multi for the event/role/hypergraph schemas")
     if cfg.scorer != "gold":
         return False
     if "gold_relations" not in df.columns:
@@ -182,6 +195,75 @@ def _use_gold(df, cfg: PipelineConfig) -> bool:
     return True
 
 
+def _sentence_batch(pdf: pd.DataFrame, cfg: PipelineConfig, tokenizer):
+    """Phase 1 of both UDFs: enumerate every sentence of an Arrow batch.
+
+    Returns ``([(row, doc_id, ents, cand, lo, hi)], n)``: the sentences
+    with at least one candidate, each with its rows ``lo:hi`` of the
+    batch's logit buffers, and the candidate total ``n``.  Optional
+    ``sub_lo``/``sub_hi`` columns (``split_dense_sentences``) restrict a
+    row to a subject range."""
+    conv_ids = pdf["conv_id"].to_numpy()
+    text_col = pdf["text"].to_numpy()
+    starts_col = pdf["m_starts"].to_numpy()
+    ends_col = pdf["m_ends"].to_numpy()
+    ranged = "sub_lo" in pdf.columns
+    if ranged:
+        sub_lo = pdf["sub_lo"].to_numpy()
+        sub_hi = pdf["sub_hi"].to_numpy()
+    sent: list[tuple] = []
+    pos = 0
+    for r in range(len(pdf)):
+        ents = _entity_spans(starts_col[r], ends_col[r])
+        if ents.shape[0] == 0:
+            continue
+        cand = _enumerate(cfg, ents, text_col[r], tokenizer)
+        if ranged:
+            cand = cand[(cand[:, 1] >= sub_lo[r]) & (cand[:, 1] < sub_hi[r])]
+        if cand.shape[0] == 0:
+            continue
+        sent.append((r, stable_doc_id(conv_ids[r]), ents, cand,
+                     pos, pos + cand.shape[0]))
+        pos += cand.shape[0]
+    return sent, pos
+
+
+def _batch_logits(pdf: pd.DataFrame, sent: list, n: int,
+                  cfg: PipelineConfig, space: LabelSpace, use_gold: bool):
+    """Phase 2 of both UDFs: score the batch's ``n`` candidates into one
+    float32 (n, C) buffer per head, sentence ``lo:hi`` in its rows."""
+    c = space.num_classes
+    turn_idxs = pdf["turn_idx"].to_numpy()
+    rel_all = np.empty((n, c), dtype=np.float32)
+    q_all = np.empty((n, c), dtype=np.float32)
+    if cfg.scorer == "hash":
+        # the whole batch vectorized, in 32k-candidate slices (row-wise
+        # ops, so identical values): a ~5 MB working set stays L2/L3
+        # resident, which scales better on bandwidth-bound executors
+        counts = [s[5] - s[4] for s in sent]
+        all_triples = np.concatenate([s[3][:, 4:10] for s in sent])
+        doc_arr = np.repeat(
+            np.array([s[1] for s in sent], dtype=np.int64), counts)
+        sent_arr = np.repeat(
+            turn_idxs[[s[0] for s in sent]].astype(np.int64), counts)
+        for lo in range(0, n, 32768):
+            sl = slice(lo, lo + 32768)
+            for buf, which in ((rel_all, 0), (q_all, 1)):
+                lg = hash_logits_batch(doc_arr[sl], sent_arr[sl],
+                                       all_triples[sl], c, cfg.hash_seed,
+                                       which)
+                buf[sl] = log_softmax(lg) if cfg.log_softmax else lg
+        return rel_all, q_all
+    text_col = pdf["text"].to_numpy()
+    gold_col = pdf["gold_relations"].to_numpy() if use_gold else None
+    for r, doc_id, ents, cand, lo, hi in sent:
+        gold = _gold_rel_tuples(gold_col[r]) if use_gold else None
+        rel_all[lo:hi], q_all[lo:hi] = _sentence_logits(
+            cfg, space, doc_id, int(turn_idxs[r]), cand, gold, ents,
+            text_col[r])
+    return rel_all, q_all
+
+
 def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
     """Fused scan→facts extraction.
 
@@ -189,87 +271,30 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
     ~2x in Arrow->pandas conversion, see ``plans.pipeline.
     prepare_sentences``): conv_id, turn_idx, text (string), m_starts
     (array<int>), m_ends (array<int>); plus gold_relations when
-    cfg.scorer == 'gold' (ValueError here when it is missing).
-
-    Per Arrow batch: enumerate every sentence's candidates, fill one
-    float32 (N, C) logit buffer per head, then decode the whole batch in
-    one ``decode_sentences_batch`` call.
+    cfg.scorer == 'gold' (ValueError here when it is missing).  Each Arrow
+    batch is enumerated, scored and decoded as one unit (module docstring).
     """
-    use_gold = _use_gold(df, cfg)
+    use_gold = _check_input(df, cfg)
     strict = cfg.tokenizer == "identity"  # pruned orderings: wordpiece only
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tokenizer = _make_tokenizer(cfg)
-        c = space.num_classes
         for pdf in batches:
-            out: list[tuple] = []
-            conv_ids = pdf["conv_id"].to_numpy()
-            turn_idxs = pdf["turn_idx"].to_numpy()
-            text_col = pdf["text"].to_numpy()
-            starts_col = pdf["m_starts"].to_numpy()
-            ends_col = pdf["m_ends"].to_numpy()
-            gold_col = pdf["gold_relations"].to_numpy() if use_gold else None
-
-            # phase 1 — enumerate all sentences in the batch
-            sent: list[tuple] = []  # (row, doc_id, ents, cand, lo, hi)
-            pos = 0
-            for r in range(len(pdf)):
-                ents = _entity_spans(starts_col[r], ends_col[r])
-                if ents.shape[0] == 0:
-                    continue
-                cand = _enumerate(cfg, ents, text_col[r], tokenizer)
-                if cand.shape[0] == 0:
-                    continue
-                sent.append((r, stable_doc_id(conv_ids[r]), ents, cand,
-                             pos, pos + cand.shape[0]))
-                pos += cand.shape[0]
+            sent, n = _sentence_batch(pdf, cfg, tokenizer)
             if not sent:
-                yield _empty_fact_frame()
+                yield pd.DataFrame(columns=_FACT_COLS)
                 continue
-
-            # phase 2 — score into one float32 (N, C) buffer per head
-            rel_all = np.empty((pos, c), dtype=np.float32)
-            q_all = np.empty((pos, c), dtype=np.float32)
-            if cfg.scorer == "hash":
-                # the whole batch vectorized, in cache-sized slices: every
-                # op is elementwise/row-wise so values are identical, but
-                # a ~32k-candidate working set (~5 MB) stays L2/L3-resident
-                # instead of streaming tens of MB through the shared
-                # memory bus per batch — measurably better multi-worker
-                # scaling on bandwidth-bound executors
-                all_triples = np.concatenate([s[3][:, 4:10] for s in sent])
-                doc_arr = np.concatenate(
-                    [np.full(s[5] - s[4], s[1], dtype=np.int64) for s in sent])
-                sent_arr = np.concatenate(
-                    [np.full(s[5] - s[4], int(turn_idxs[s[0]]), dtype=np.int64)
-                     for s in sent])
-                step = 32768
-                for lo_ in range(0, pos, step):
-                    sl = slice(lo_, min(lo_ + step, pos))
-                    r_ = hash_logits_batch(
-                        doc_arr[sl], sent_arr[sl], all_triples[sl], c,
-                        cfg.hash_seed, 0)
-                    q_ = hash_logits_batch(
-                        doc_arr[sl], sent_arr[sl], all_triples[sl], c,
-                        cfg.hash_seed, 1)
-                    if cfg.log_softmax:
-                        r_ = log_softmax(r_)
-                        q_ = log_softmax(q_)
-                    rel_all[sl] = r_
-                    q_all[sl] = q_
-            else:
-                for r, doc_id, ents, cand, lo, hi in sent:
-                    gold = _gold_rel_tuples(gold_col[r]) if use_gold else None
-                    rel_all[lo:hi], q_all[lo:hi] = _sentence_logits(
-                        cfg, space, doc_id, int(turn_idxs[r]), cand, gold,
-                        ents, text_col[r])
-
+            rel_all, q_all = _batch_logits(pdf, sent, n, cfg, space, use_gold)
             # phase 3 — decode the whole batch (one tensor pipeline per
             # entity-count group, see decode_sentences_batch)
             batched = decode_sentences_batch(
                 [s_[2:] for s_ in sent], rel_all, q_all, space,
                 same_entity=cfg.same_entity, strict=strict,
                 unidirect=cfg.eval_unidirect)
+            conv_ids = pdf["conv_id"].to_numpy()
+            turn_idxs = pdf["turn_idx"].to_numpy()
+            text_col = pdf["text"].to_numpy()
+            out: list[tuple] = []
             for (r, *_), preds in zip(sent, batched):
                 if not preds:
                     continue
@@ -293,9 +318,9 @@ _FACT_COLS = [
     "conv_id", "turn_idx", "pred_idx", "m1s", "m1e", "m2s", "m2e", "rel",
     "m3s", "m3e", "qual", "rel_score", "q_score", "subj", "obj", "value"]
 
-
-def _empty_fact_frame() -> pd.DataFrame:
-    return pd.DataFrame(columns=_FACT_COLS)
+_SCORE_COLS = [
+    "conv_id", "turn_idx", "cand_idx", "i", "j", "k", "m1s", "m1e", "m2s",
+    "m2e", "m3s", "m3e", "n_entities", "rel_logits", "q_logits"]
 
 
 def split_dense_sentences(sents, max_cost: int = 1000):
@@ -337,51 +362,28 @@ def score_candidates(df, cfg: PipelineConfig, space: LabelSpace):
     scale, follow with ``.repartition(N, 'conv_id', 'turn_idx', 'sub_lo')``
     before an expensive model scorer.
     """
-    use_gold = _use_gold(df, cfg)
+    use_gold = _check_input(df, cfg)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tokenizer = _make_tokenizer(cfg)
         for pdf in batches:
-            frames: list[pd.DataFrame] = []
-            ranged = "sub_lo" in pdf.columns
-            gold_col = pdf["gold_relations"] if use_gold else None
-            for r in range(len(pdf)):
-                conv_id = pdf["conv_id"].iat[r]
-                turn_idx = int(pdf["turn_idx"].iat[r])
-                text = pdf["text"].iat[r]
-                ents = _entity_spans(
-                    pdf["m_starts"].iat[r], pdf["m_ends"].iat[r])
-                if ents.shape[0] == 0:
-                    continue
-                cand = _enumerate(cfg, ents, text, tokenizer)
-                if ranged:
-                    lo = int(pdf["sub_lo"].iat[r])
-                    hi = int(pdf["sub_hi"].iat[r])
-                    cand = cand[(cand[:, 1] >= lo) & (cand[:, 1] < hi)]
-                if cand.shape[0] == 0:
-                    continue
-                gold = _gold_rel_tuples(gold_col.iat[r]) if use_gold else None
-                rel_lg, q_lg = _sentence_logits(
-                    cfg, space, stable_doc_id(conv_id), turn_idx, cand, gold,
-                    ents, text)
-                f = pd.DataFrame(
-                    cand,
-                    columns=["cand_idx", "i", "j", "k", "m1s", "m1e", "m2s",
-                             "m2e", "m3s", "m3e"],
-                )
-                f.insert(0, "conv_id", conv_id)
-                f.insert(1, "turn_idx", turn_idx)
-                f["n_entities"] = ents.shape[0]
-                f["rel_logits"] = list(rel_lg)
-                f["q_logits"] = list(q_lg)
-                frames.append(f)
-            cols = ["conv_id", "turn_idx", "cand_idx", "i", "j", "k",
-                    "m1s", "m1e", "m2s", "m2e", "m3s", "m3e",
-                    "n_entities", "rel_logits", "q_logits"]
-            if frames:
-                yield pd.concat(frames, ignore_index=True)[cols]
-            else:
-                yield pd.DataFrame(columns=cols)
+            sent, n = _sentence_batch(pdf, cfg, tokenizer)
+            if not sent:
+                yield pd.DataFrame(columns=_SCORE_COLS)
+                continue
+            rel_all, q_all = _batch_logits(pdf, sent, n, cfg, space, use_gold)
+            rows = [s_[0] for s_ in sent]
+            counts = [s_[5] - s_[4] for s_ in sent]
+            f = pd.DataFrame(np.concatenate([s_[3] for s_ in sent]),
+                             columns=_SCORE_COLS[2:12])
+            f.insert(0, "conv_id",
+                     np.repeat(pdf["conv_id"].to_numpy()[rows], counts))
+            f.insert(1, "turn_idx",
+                     np.repeat(pdf["turn_idx"].to_numpy()[rows], counts))
+            f["n_entities"] = np.repeat([s_[2].shape[0] for s_ in sent], counts)
+            f["rel_logits"] = list(rel_all)
+            f["q_logits"] = list(q_all)
+            yield f
 
     return df.mapInPandas(run, schema=SCORE_SCHEMA)
 

@@ -2,8 +2,12 @@
 normalized reference-shaped documents (operators/normalize.py output).
 
 Same fused mapInPandas architecture as the hyperrelation path; the heads
-(v, q, qb, qc) are hash- or gold-scored per candidate and decoded by
-decode_multi.decode_sentence_multi.
+(v, q, qb, qc) are scored per sentence by ``score_heads`` and decoded by
+decode_multi.decode_sentence_multi.  ``score_heads`` shares its parts with
+the hyperrelation UDFs: hash noise from ``hash_logits_batch``, gold labels
+from the one vectorized lookup (``scoring_core._lookup_gold_labels``, one
+column per head), and model heads from the worker's one cached
+``ModelScorer`` (``extraction._worker_model_scorer``).
 """
 
 from __future__ import annotations
@@ -18,7 +22,9 @@ from text2nkg_spark.candidates import enumerate_triples
 from text2nkg_spark.config import PipelineConfig
 from text2nkg_spark.decode_multi import (
     decode_sentence_multi, gold_orderings_multi)
-from text2nkg_spark.scoring_core import hash_logits_batch, log_softmax
+from text2nkg_spark.operators.extraction import _worker_model_scorer
+from text2nkg_spark.scoring_core import (
+    _lookup_gold_labels, hash_logits_batch, log_softmax)
 
 _N_HEADS = {"event": 4, "role": 3, "hypergraph": 2}
 _HEAD_NAMES = ("v", "q", "qb", "qc")
@@ -107,35 +113,6 @@ def _rel_cell_to_dicts(cell) -> list[dict]:
     return out
 
 
-def _worker_scorer_multi(cfg: PipelineConfig):
-    """One ModelScorer per python worker for the multi-schema path.
-
-    GENUINE weight sharing with the hyperrelation scorer — in one
-    direction: head widths are explicit arguments to
-    ``score_sentence_multi`` (the encoder's own num_classes is irrelevant
-    to ``head_logits``), so the multi path reuses an already-loaded
-    scorer with the same (checkpoint, seq/pair lengths, variant) — any
-    num_classes.  The converse does NOT hold: ``_worker_model_scorer``
-    (extraction.py) keys on num_classes exactly, because hyperrelation's
-    ``score_sentence`` reads its output width from
-    ``encoder.num_classes`` — so a job that loads the multi path FIRST
-    still instantiates a second model for the hyperrelation path.  Load
-    hyperrelation first (or accept two models) when mixing both on a real
-    torch checkpoint."""
-    from text2nkg_spark.operators.extraction import _WORKER_SCORERS
-    from text2nkg_spark.operators.model_scorer import ModelScorer
-
-    prefix = (cfg.model_checkpoint, cfg.max_seq_length, cfg.max_pair_length)
-    for key, scorer in _WORKER_SCORERS.items():
-        if key[:3] == prefix and key[4] == cfg.model_variant:
-            return scorer
-    key = prefix + ("multi", cfg.model_variant)
-    _WORKER_SCORERS[key] = ModelScorer(
-        cfg.model_checkpoint, cfg.max_seq_length, cfg.max_pair_length,
-        variant=cfg.model_variant)
-    return _WORKER_SCORERS[key]
-
-
 def score_heads(
     schema: str,
     cfg: PipelineConfig,
@@ -159,11 +136,12 @@ def score_heads(
     if cfg.scorer == "model":
         if ents is None or tokens is None:
             raise ValueError("scorer='model' needs entity spans and tokens")
-        outs = _worker_scorer_multi(cfg).score_sentence_multi(
+        # the widths are explicit, so the scorer's own width is irrelevant
+        outs = _worker_model_scorer(cfg, widths[0]).score_sentence_multi(
             list(tokens), ents, cand, widths)
         for hi in range(n_heads):
             heads[_HEAD_NAMES[hi]] = outs[hi].astype(np.float64)
-    elif cfg.scorer in ("hash", "gold"):
+    else:
         docs = np.full(n, doc_id, dtype=np.int64)
         sents = np.full(n, sent_idx, dtype=np.int64)
         for hi in range(n_heads):
@@ -174,16 +152,10 @@ def score_heads(
             lm = {lab: i for i, lab in enumerate(labels.label_list)}
             qm = {lab: i for i, lab in enumerate(labels.q_label_list)}
             gi = gold_orderings_multi(schema, gold_rels or [], lm, qm)
-            w = cfg.gold_weight
-            for r in range(n):
-                key = tuple(int(v) for v in triples[r])
-                labs = gi.get(key)
-                if labs is None:
-                    labs = (0,) * n_heads
-                for hi in range(n_heads):
-                    heads[_HEAD_NAMES[hi]][r, labs[hi]] += w
-    else:
-        raise NotImplementedError(f"unknown scorer '{cfg.scorer}'")
+            labs = _lookup_gold_labels(triples, gi, width=n_heads)
+            rows = np.arange(n)
+            for hi in range(n_heads):
+                heads[_HEAD_NAMES[hi]][rows, labs[:, hi]] += cfg.gold_weight
     if cfg.log_softmax:
         heads = {k: log_softmax(v) for k, v in heads.items()}
     return heads

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
@@ -62,24 +61,27 @@ def predicted_ner_table(
     labels = list(ner_label_list)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from text2nkg_spark.operators.extraction import _worker_model_scorer
+        from text2nkg_spark.operators.extraction import (
+            _entity_spans, _worker_model_scorer)
         from text2nkg_spark.plans.pipeline import default_label_space
 
-        scorer = _worker_model_scorer(cfg, space or default_label_space())
+        scorer = _worker_model_scorer(
+            cfg, (space or default_label_space()).num_classes)
         cols = ["conv_id", "turn_idx", "start", "end", "ner_label"]
         for pdf in batches:
+            conv_ids = pdf["conv_id"].to_numpy()
+            turn_idxs = pdf["turn_idx"].to_numpy()
+            text_col = pdf["text"].to_numpy()
+            starts_col = pdf["m_starts"].to_numpy()
+            ends_col = pdf["m_ends"].to_numpy()
             out: list[tuple] = []
             for r in range(len(pdf)):
-                starts = pdf["m_starts"].iat[r]
-                if starts is None or len(starts) == 0:
+                ents = _entity_spans(starts_col[r], ends_col[r])
+                if ents.shape[0] == 0:
                     continue
-                ents = np.column_stack([
-                    np.asarray(starts, dtype=np.int64),
-                    np.asarray(pdf["m_ends"].iat[r], dtype=np.int64)])
-                toks = pdf["text"].iat[r].split(" ")
-                preds = scorer.predict_mention_ner(toks, ents, len(labels))
-                conv = pdf["conv_id"].iat[r]
-                turn = int(pdf["turn_idx"].iat[r])
+                preds = scorer.predict_mention_ner(
+                    text_col[r].split(" "), ents, len(labels))
+                conv, turn = conv_ids[r], int(turn_idxs[r])
                 for m in range(ents.shape[0]):
                     out.append((conv, turn, int(ents[m, 0]),
                                 int(ents[m, 1]), labels[int(preds[m])]))

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from text2nkg_spark.operators.similarity import md5_hash52
+from text2nkg_spark.plans.manifest import md5_hash52
 
 #: hash-space denominator for sampling rates: rate r keeps buckets < r*1000
 SAMPLE_BUCKETS = 1000

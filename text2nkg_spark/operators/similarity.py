@@ -17,19 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from text2nkg_spark.plans.manifest import md5_hash52
+
 # 2^51 — centers the 52-bit md5 hash so hyperplane weights are signed
 _CENTER_52 = 1 << 51
-
-
-def md5_hash52(col) -> "F.Column":
-    """52-bit integer hash: first 13 hex chars of md5, base-16 parsed.
-
-    52 bits keep the value exactly representable in a float64, which is what
-    lets a SQL engine without integer hex parsing (DuckDB) reproduce it via
-    digit-sum arithmetic — the cross-engine hash primitive for every
-    oracle-checked LSH/simhash operator.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 13), 16, 10).cast("long")
 
 
 def _norm(v):

@@ -4,7 +4,7 @@
 unverifiable across systems; the K-Minimum-Values sketch over md5_hash52
 gives the same O(k) memory / mergeable-union properties with a DETERMINISTIC
 estimate any engine can recompute bit-for-bit — the house rule for every
-hash-derived operator here (see similarity.md5_hash52).
+hash-derived operator here (see plans.manifest.md5_hash52).
 
 * ``kmv_distinct``  — per-group distinct-count estimate from the k-th
   smallest hash of the distinct values: est = floor((k-1) * 2^52 / h_k)
@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from text2nkg_spark.operators.similarity import md5_hash52
+from text2nkg_spark.plans.manifest import md5_hash52
 
 _HASH_SPACE = float(1 << 52)  # md5_hash52 range; exact as a float64
 

@@ -32,6 +32,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 
+def md5_hash52(col) -> "F.Column":
+    """52-bit integer hash: first 13 hex chars of md5, base-16 parsed.
+
+    52 bits keep the value exactly representable in a float64, which is what
+    lets a SQL engine without integer hex parsing (DuckDB) reproduce it via
+    digit-sum arithmetic — the cross-engine hash primitive for every
+    oracle-checked LSH/simhash operator.
+    """
+    return F.conv(F.substring(F.md5(col), 1, 13), 16, 10).cast("long")
+
+
 def lineage_manifest(
     df: DataFrame, stage: str, part_col: str, hash_cols: list[str]
 ) -> DataFrame:
@@ -47,8 +58,6 @@ def lineage_manifest(
     auditor recomputes it bit-for-bit.  This is the hash a resume/audit
     step compares across a write→read round trip.
     """
-    from text2nkg_spark.operators.similarity import md5_hash52
-
     canonical = F.concat_ws(
         "\x01", *[F.col(c).cast("string") for c in hash_cols])
     return (

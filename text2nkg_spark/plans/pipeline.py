@@ -124,9 +124,8 @@ def run_pipeline(
     manifest and observing only the suffix rebuild).  Fact tables partition
     by a conv-hash bucket so downstream per-conversation reads prune.
     """
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from text2nkg_spark.operators.canonicalize import canonicalize_entities
+    from text2nkg_spark.operators.canonicalize import (
+        canonicalize_entities, entity_rollup, rekey_facts_to_entities)
     from text2nkg_spark.operators.mentions import sentence_surfaces
     from text2nkg_spark.plans.manifest import StageManifest, input_fingerprint
 
@@ -147,13 +146,10 @@ def run_pipeline(
         lambda: prepare_sentences(
             transcripts, gold_in, udf_partitions=cfg.shuffle_partitions))
 
-    # every config field that shapes emitted predictions must be in the
-    # resume key, or a config change silently serves stale parquet
-    fp2 = "|".join(str(x) for x in (
-        fp_sents, cfg.scorer, cfg.hash_seed, space.d, cfg.tokenizer,
-        cfg.wordpiece_piece_len, cfg.model_checkpoint, cfg.model_variant,
-        cfg.max_seq_length, cfg.max_pair_length, cfg.same_entity,
-        cfg.log_softmax, cfg.gold_weight, cfg.eval_unidirect))
+    # the resume key of every stage built from predictions: the whole
+    # config and the label NAMES (they name rels/quals and set the [r]/[k]
+    # direction masks), so no config or label change serves stale parquet
+    fp2 = f"{fp_sents}|{cfg!r}|{space.base_labels!r}"
     preds = man.run_stage(
         spark, "predictions", fp2,
         lambda: extract_facts_fused(sents, cfg, space).withColumn(
@@ -177,20 +173,9 @@ def run_pipeline(
     s2e = man.run_stage(spark, "surface_to_entity", fp, build_s2e)
 
     def build_entities():
-        surf = sentence_surfaces(sents)
-        return (
-            surf.join(s2e, "surface")
-            .groupBy("entity_id")
-            .agg(
-                F.min("surface").alias("canonical_surface"),
-                F.countDistinct("surface").alias("n_surfaces"),
-                F.count(F.lit(1)).alias("n_mentions"),
-            )
-        )
+        return entity_rollup(sentence_surfaces(sents).join(s2e, "surface"))
 
     entities = man.run_stage(spark, "entities", fp, build_entities)
-
-    from text2nkg_spark.operators.canonicalize import rekey_facts_to_entities
 
     facts_canonical = man.run_stage(
         spark, "facts_canonical", fp2,
@@ -209,9 +194,7 @@ def run_pipeline(
             return predicted_ner_table(
                 sents, cfg, ["NIL", "Entity"], space=space)
 
-        mention_ner = man.run_stage(
-            spark, "mention_ner",
-            f"{fp2}|ner={cfg.use_ner_results}", build_ner)
+        mention_ner = man.run_stage(spark, "mention_ner", fp2, build_ner)
 
     # S6 — metrics sink: per-stage row counts / wall / partitions from the
     # lineage manifests, plus eval P/R/F1 when gold is supplied; written as
@@ -239,13 +222,7 @@ def run_pipeline(
             stage_metrics["eval"] = relation_qualifier_prf(preds, gold)
         return metrics_table(spark, stage_metrics)
 
-    mdf = man.run_stage(
-        spark, "metrics",
-        # the NER mode changes which stages exist, so it must be in THIS
-        # resume key too (fp2 deliberately excludes it — it cannot change
-        # predictions — but the metrics table lists stage rows)
-        f"{fp2}{fp_gold}|ner={cfg.use_ner_results}",
-        build_metrics)
+    mdf = man.run_stage(spark, "metrics", fp2 + fp_gold, build_metrics)
 
     out = {
         "sentences": sents, "predictions": preds, "facts": facts,

@@ -13,7 +13,9 @@ semantics* is deterministic given logits (SURVEY.md §7.1).  Two stand-ins:
   facts, which is how P/R >= 0.95 vs gold is demonstrated end to end.
 
 Both are vectorized numpy; inside Spark they run under mapInPandas on Arrow
-batches (no per-row Python).
+batches (no per-row Python).  ``_lookup_gold_labels`` is the one gold-label
+lookup: the hyperrelation gold scorer reads its two columns, the
+multi-schema ``score_heads`` one column per head.
 """
 
 from __future__ import annotations
@@ -128,17 +130,18 @@ def gold_orderings(
 
 def _lookup_gold_labels(
     triples: np.ndarray,
-    gold_index: dict[tuple[int, int, int, int, int, int], tuple[int, int]],
-) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized dict.get over (N, 6) keys: sorted structured-array join
-    (sort the G gold keys once, one searchsorted per batch) — no per-row
-    Python.  Missing keys map to (0, 0) exactly like the reference's
-    ``q_pos2label.get(..., (0, 0))``."""
-    n = triples.shape[0]
-    rlab = np.zeros(n, dtype=np.int64)
-    qlab = np.zeros(n, dtype=np.int64)
+    gold_index: dict[tuple[int, int, int, int, int, int], tuple[int, ...]],
+    width: int = 2,
+) -> np.ndarray:
+    """Vectorized dict.get over (N, 6) keys -> (N, width) label rows: sorted
+    structured-array join (sort the G gold keys once, one searchsorted per
+    batch) — no per-row Python.  Missing keys map to zeros exactly like the
+    reference's ``q_pos2label.get(..., (0, 0))``; ``width`` is the label
+    tuple length (2 for hyperrelation, one per head for the multi-schema
+    scorers)."""
+    out = np.zeros((triples.shape[0], width), dtype=np.int64)
     if not gold_index:
-        return rlab, qlab
+        return out
     gk = np.asarray(list(gold_index.keys()), dtype=np.int64)
     gv = np.asarray(list(gold_index.values()), dtype=np.int64)
     dt = [("", np.int64)] * 6
@@ -146,12 +149,10 @@ def _lookup_gold_labels(
     tv = np.ascontiguousarray(triples.astype(np.int64)).view(dt).ravel()
     order = np.argsort(gkv, kind="stable")
     gkv = gkv[order]
-    idx = np.searchsorted(gkv, tv)
-    idx_c = np.minimum(idx, len(gkv) - 1)
+    idx_c = np.minimum(np.searchsorted(gkv, tv), len(gkv) - 1)
     hit = gkv[idx_c] == tv
-    rlab[hit] = gv[order[idx_c[hit]], 0]
-    qlab[hit] = gv[order[idx_c[hit]], 1]
-    return rlab, qlab
+    out[hit] = gv[order[idx_c[hit]]]
+    return out
 
 
 def gold_logits(
@@ -167,8 +168,8 @@ def gold_logits(
     rel = hash_logits(doc_id, sent_idx, triples, num_classes, seed, 0)
     qul = hash_logits(doc_id, sent_idx, triples, num_classes, seed, 1)
     w = np.float32(weight)
-    n = triples.shape[0]
-    rlab, qlab = _lookup_gold_labels(triples, gold_index)
-    rel[np.arange(n), rlab] += w
-    qul[np.arange(n), qlab] += w
+    rows = np.arange(triples.shape[0])
+    labs = _lookup_gold_labels(triples, gold_index)
+    rel[rows, labs[:, 0]] += w
+    qul[rows, labs[:, 1]] += w
     return rel, qul

@@ -1,9 +1,9 @@
 """T1/T2 — tokenization + cross-sentence context windowing
 (run_re.py:223-230, 276-327), numpy-side (used inside the scoring UDFs).
 
-The production tokenizer is a HuggingFace wordpiece (gated import — not
-shipped in this container); two deterministic stand-ins exercise the same
-arithmetic:
+The reference tokenizes with a HuggingFace wordpiece, which is not a
+dependency here; two deterministic stand-ins exercise the same arithmetic
+(a real tokenizer plugs in through the same ``tokenize_word`` method):
 
 * ``IdentityTokenizer`` — 1 token == 1 subword (what the deterministic
   pipeline uses; span arithmetic collapses to the identity).
@@ -35,24 +35,6 @@ class FakeWordpieceTokenizer:
         if len(w) <= p:
             return [w]
         return [w[:p]] + [f"##{w[i:i+p]}" for i in range(p, len(w), p)]
-
-
-class ModelTokenizer:
-    """HF tokenizer adapter — gated; import fails gracefully here."""
-
-    def __init__(self, name: str = "bert-base-uncased"):
-        try:
-            from transformers import AutoTokenizer  # noqa: F401
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "transformers is not shipped in this container; use "
-                "IdentityTokenizer or FakeWordpieceTokenizer") from e
-        from transformers import AutoTokenizer
-
-        self._tok = AutoTokenizer.from_pretrained(name)
-
-    def tokenize_word(self, w: str) -> list[str]:  # pragma: no cover
-        return self._tok.tokenize(w)
 
 
 def subword_maps(sentences: list[list[str]], tokenizer) -> dict:
