@@ -1,30 +1,41 @@
-"""Vectorized hyperrelation decode — the Spark-side implementation of the
-reference's eval decode (run_re.py:1293-1448), written tensor-first.
+"""Vectorized n-ary decode — the Spark-side implementation of the
+reference's eval decode (run_re.py:1293-1448 for hyperrelation; 1519-2174
+for event, role and hypergraph, see decode_multi), written tensor-first.
 
-Where the reference walks an insertion-ordered dict and sums python lists six
-times per triple, we build dense (E, E, E, C) score tensors per sentence and
-compute the full 6-permutation ensemble with five transposes + two
-fancy-index block swaps — the additions happen in the reference's exact
-sequence, so the float64 sums (and therefore every argmax and NMS ordering)
-are bit-identical to the oracle (text2nkg_spark/reference_oracle.py), which
-tests assert.
+The reference visits each span triple once in candidate order, sums the
+triple's six orderings, takes the argmax and keeps facts by greedy NMS.
+Every schema decodes through one pipeline here:
 
-Ensemble algebra (sym block = ['NIL'], swap(x) = x[:1]+x[num:]+x[1:num]):
+* :func:`_scatter` — dense (B, E, E, E, C) tensors per head for a group of
+  sentences with E entities, plus the mask of scored orderings;
+* :func:`_ensemble` — the 6-ordering sum, driven by a per-schema head
+  table; the additions happen in the reference's exact sequence, so the
+  float64 sums (and therefore every argmax and NMS ordering) are
+  bit-identical to the oracle (text2nkg_spark/reference_oracle.py);
+* :func:`_anchors` — the visited walk, vectorized: the live anchor triple
+  of every unordered span triple, in the walk's order;
+* :func:`_nms` — stable sort + greedy NMS.
+
+Schemas differ only in their head table and the select/project step after
+the argmax.  Hyperrelation ensemble algebra (sym block = ['NIL'],
+swap(x) = x[:1]+x[num:]+x[1:num]; S = rel logits, Q = qualifier logits):
 
     V[i,j,k]  = S[ijk] + swap(S[jik]) + Q[ikj] + Q[jki] + swap(Q[kij]) + S[kji]
     Qc[i,j,k] = Q[ijk] + Q[jik] + S[ikj] + swap(S[jki]) + S[kij] + swap(Q[kji])
 
-(derived from run_re.py:1317-1386; S = rel logits, Q = qualifier logits).
+(derived from run_re.py:1317-1386).
 
-One entry point decodes: :func:`decode_sentences_batch` takes many
-sentences and picks the path per sentence — the ``--eval_unidirect``
-ablation (:func:`decode_sentence_unidirect`), the reference loop
-(:func:`decode_sentence_arrays`) for ``same_entity`` or a pruned
-candidate grid, and otherwise one (B, E, E, E, C) tensor pipeline per
-entity-count group.  :func:`decode_sentence` is that call on one sentence.
+One entry point decodes hyperrelation: :func:`decode_sentences_batch`
+sends the ``--eval_unidirect`` ablation to
+:func:`decode_sentence_unidirect` and every other sentence through the
+pipeline, one batch per entity count.  :func:`decode_sentence` is that call
+on one sentence.
 """
 
 from __future__ import annotations
+
+import functools
+from itertools import combinations, combinations_with_replacement
 
 import numpy as np
 
@@ -36,56 +47,145 @@ class MissingOrderingError(ValueError):
     run_re.py:1328/1343/1358/1373/1386)."""
 
 
-def _ensemble(
-    s: np.ndarray, q: np.ndarray, sw: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """(V, Qc) over the trailing (E, E, E, C) axes of the rel (S) and
-    qualifier (Q) tensors; any leading axes are batch axes."""
-    n = s.ndim - 4
+# np.transpose axes that read X[i,j,k] = x[ordering] over the trailing
+# (E, E, E) axes: np.transpose(x, p)[i0,i1,i2] = x[a] where a[p[m]] = i_m,
+# so for the 3-cycles jki and kij the axes are the INVERSE permutation
+_AXES = {
+    "jik": (1, 0, 2), "ikj": (0, 2, 1), "jki": (2, 0, 1),
+    "kij": (1, 2, 0), "kji": (2, 1, 0),
+}
+
+# the hyperrelation _ensemble table: V accumulates on the rel head "v" (S),
+# Qc on the qualifier head "q" (Q).  Per ordering, in the reference's
+# addition order (run_re.py:1317-1386): {target head: source head}, and
+# the targets whose term is half-swapped
+HYPERRELATION = (
+    ("jik", {"v": "v", "q": "q"}, {"v"}),
+    ("ikj", {"v": "q", "q": "v"}, ()),
+    ("jki", {"v": "q", "q": "v"}, {"q"}),
+    ("kij", {"v": "q", "q": "v"}, {"v"}),
+    ("kji", {"v": "v", "q": "q"}, {"q"}),
+)
+
+
+def _ensemble(heads: dict, table: tuple, sw: np.ndarray | None = None) -> dict:
+    """The 6-ordering ensemble over the trailing (E, E, E, C) axes of each
+    head; any leading axes are batch axes.  Each head starts from its own
+    (ijk) tensor and, per ordering of ``table`` in order, adds the
+    transposed source head named for it — through the half-swap index
+    ``sw`` where the table says so.  One addition per head per ordering in
+    the reference's sequence: float sums are not associative, so this order
+    is what makes them bit-identical."""
+    n = next(iter(heads.values())).ndim - 4
     lead = tuple(range(n))
-
-    def t(x: np.ndarray, perm: tuple[int, int, int]) -> np.ndarray:
-        return np.transpose(x, lead + tuple(p + n for p in perm) + (n + 3,))
-
-    # addition sequence mirrors run_re.py:1317-1386 exactly (non-associative
-    # float sums must run in the same order for bit parity)
-    # np.transpose(x, p)[i0,i1,i2] = x[a] where a[p[m]] = i_m, so to read
-    # X[i,j,k] = x[j,k,i] the axes are (2,0,1) and for x[k,i,j] they are
-    # (1,2,0) — the 3-cycles use the INVERSE permutation.
-    v = s.copy()
-    v += t(s, (1, 0, 2))[..., sw]   # swap(S[j,i,k])
-    v += t(q, (0, 2, 1))            # Q[i,k,j]
-    v += t(q, (2, 0, 1))            # Q[j,k,i]
-    v += t(q, (1, 2, 0))[..., sw]   # swap(Q[k,i,j])
-    v += t(s, (2, 1, 0))            # S[k,j,i]
-
-    qc = q.copy()
-    qc += t(q, (1, 0, 2))           # Q[j,i,k]
-    qc += t(s, (0, 2, 1))           # S[i,k,j]
-    qc += t(s, (2, 0, 1))[..., sw]  # swap(S[j,k,i])
-    qc += t(s, (1, 2, 0))           # S[k,i,j]
-    qc += t(q, (2, 1, 0))[..., sw]  # swap(Q[k,j,i])
-    return v, qc
+    out = {name: h.copy() for name, h in heads.items()}
+    for ordering, sources, swapped in table:
+        ax = lead + tuple(a + n for a in _AXES[ordering]) + (n + 3,)
+        for target, source in sources.items():
+            term = np.transpose(heads[source], ax)
+            out[target] += term[..., sw] if target in swapped else term
+    return out
 
 
-def ensemble_tensors(
-    e: int,
-    cand: np.ndarray,      # (N, 10) from candidates.enumerate_triples
-    rel_lg: np.ndarray,    # (N, C) float64
-    q_lg: np.ndarray,      # (N, C) float64
-    space: LabelSpace,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Returns (V, Qc, present) dense tensors over entity index triples."""
-    c = space.num_classes
-    s = np.zeros((e, e, e, c), dtype=np.float64)
-    q = np.zeros((e, e, e, c), dtype=np.float64)
-    present = np.zeros((e, e, e), dtype=bool)
-    ii, jj, kk = cand[:, 1], cand[:, 2], cand[:, 3]
-    s[ii, jj, kk] = rel_lg
-    q[ii, jj, kk] = q_lg
-    present[ii, jj, kk] = True
-    v, qc = _ensemble(s, q, space.swap_index())
-    return v, qc, present
+def _scatter(items: list, logits: dict, e: int) -> tuple[dict, np.ndarray]:
+    """Dense (B, E, E, E, C) tensors per head for the ``items``
+    ``(entities, cand, lo, hi)`` of sentences with ``e`` entities, and the
+    (B, E, E, E) mask of scored orderings.  Each sentence's logit rows
+    ``lo:hi`` land at their flat (i, j, k) index ``cand[:, 0]``: a full grid
+    is one row-block copy, a pruned grid one row scatter.  Unscored
+    orderings stay zero; :func:`_anchors` never reads them."""
+    nb, n3 = len(items), e * e * e
+    dense = {name: np.zeros((nb, n3, lg.shape[1]))
+             for name, lg in logits.items()}
+    present = np.zeros((nb, n3), dtype=bool)
+    for b, (_ents, cand, lo, hi) in enumerate(items):
+        rows = slice(None) if hi - lo == n3 else cand[:, 0]
+        for name, lg in logits.items():
+            dense[name][b, rows] = lg[lo:hi]
+        present[b, rows] = True
+    shape = (nb, e, e, e)
+    return ({name: d.reshape(shape + d.shape[-1:])
+             for name, d in dense.items()}, present.reshape(shape))
+
+
+# anchor index triples per (entity count, same_entity), cached: the build
+# is a pure function of its key, and E is bounded by mentions per sentence
+@functools.cache
+def _anchor_triples(e: int, same_entity: bool) -> tuple:
+    pick = combinations_with_replacement if same_entity else combinations
+    t = np.array(list(pick(range(e), 3)), dtype=np.int64).reshape(-1, 3)
+    return t[:, 0], t[:, 1], t[:, 2]
+
+
+def _anchors(
+    present: np.ndarray,   # (B, E, E, E) scored orderings
+    ents: np.ndarray,      # (B, E, 2) spans
+    same_entity: bool,
+    strict: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The reference's visited walk (run_re.py:1294-1316), vectorized.
+
+    Candidates arrive in lexicographic (i, j, k) order, so each unordered
+    triple is first met in its sorted ordering — its anchor: i<j<k, or
+    i<=j<=k under ``same_entity`` (without it a repeated index is a
+    degenerate triple the walk skips).  An anchor is live when all its
+    orderings were scored and, without ``same_entity``, its three spans
+    differ.  A triple with some but not all orderings scored raises
+    :class:`MissingOrderingError` under ``strict`` and is skipped
+    otherwise.  Returns the (b, i, j, k) index arrays of the live anchors,
+    sentence-major and lexicographic within a sentence: the walk's order.
+    """
+    ii, jj, kk = _anchor_triples(present.shape[1], same_entity)
+    scored = [present[:, a, b, c] for a, b, c in (
+        (ii, jj, kk), (jj, ii, kk), (ii, kk, jj),
+        (jj, kk, ii), (kk, ii, jj), (kk, jj, ii))]
+    live = np.logical_and.reduce(scored)
+    met = np.logical_or.reduce(scored)
+    if not same_entity:
+        s1, s2, s3 = ents[:, ii], ents[:, jj], ents[:, kk]
+        distinct = ((s1 != s2).any(-1) & (s2 != s3).any(-1)
+                    & (s3 != s1).any(-1))
+        live &= distinct
+        met &= distinct
+    if strict and (met & ~live).any():
+        b, a = np.argwhere(met & ~live)[0]
+        raise MissingOrderingError(
+            f"triple {ents[b, [ii[a], jj[a], kk[a]]].tolist()} missing an "
+            "ordering (pruned span)")
+    bs, sel = np.nonzero(live)
+    return bs, ii[sel], jj[sel], kk[sel]
+
+
+def _nms(results: list[tuple], n_extra: int = 0) -> list[tuple]:
+    """Stable sort by score + greedy NMS (run_re.py:1422-1448): an item
+    clashes with a kept one when rel, qual and the ``n_extra`` trailing
+    labels are equal and all three spans overlap.  Items are
+    ``(score, m1, m2, rel, q_score, m3, qual, *extra)``; returns the kept
+    ones in NMS order (callers project them to label names).  Kept items
+    are indexed by their labels, so an item is tested only against the
+    kept items it can clash with."""
+    def overlap(a, b):
+        return b[0] <= a[0] <= b[1] or a[0] <= b[0] <= a[1]
+
+    kept: list[tuple] = []
+    by_labels: dict[tuple, list[tuple]] = {}
+    for oi in np.argsort(-np.array([r[0] for r in results]), kind="stable"):
+        it = results[oi]
+        same = by_labels.setdefault((it[3], it[6], *it[7:7 + n_extra]), [])
+        if not any(overlap(it[1], x[1]) and overlap(it[2], x[2])
+                   and overlap(it[5], x[5]) for x in same):
+            same.append(it)
+            kept.append(it)
+    return kept
+
+
+def _project(kept: list[tuple], label_list: list[str]) -> list[tuple]:
+    """Kept hyperrelation NMS items -> output rows
+    (m1s, m1e, m2s, m2e, rel_name, m3s, m3e, qual_name, rel_score, q_score)."""
+    return [
+        (m1[0], m1[1], m2[0], m2[1], label_list[pred],
+         m3[0], m3[1], label_list[q_pred], score, q_score)
+        for score, m1, m2, pred, q_score, m3, q_pred in kept]
 
 
 def _normalize_direction(
@@ -125,79 +225,16 @@ def _emit(
     entities: np.ndarray, rows: np.ndarray, sc, qsc, a1, a2, a3, pred, q_pred,
     label_list: list[str],
 ) -> list[tuple]:
-    """NMS over the normalized candidates ``rows`` (in candidate order)."""
+    """NMS over the normalized candidates ``rows`` (in candidate order),
+    projected to output rows."""
     if rows.size == 0:
         return []
     spans = [tuple(int(x) for x in row) for row in entities]
-    return _nms([
+    return _project(_nms([
         (float(sc[w]), spans[a1[w]], spans[a2[w]], int(pred[w]),
          float(qsc[w]), spans[a3[w]], int(q_pred[w]))
         for w in rows
-    ], label_list)
-
-
-def _nms(results: list[tuple], label_list: list[str]) -> list[tuple]:
-    """Stable-sort + greedy NMS + projection (run_re.py:1422-1493 tail).
-
-    r7: the kept-set span/label columns live in preallocated arrays
-    compared on ``[:k]`` slices — the previous list->np.array rebuild per
-    candidate was O(k) allocations each; the comparisons (and therefore
-    the kept set) are unchanged."""
-    if not results:
-        return []
-    n = len(results)
-    scores = np.array([r[0] for r in results])
-    order = np.argsort(-scores, kind="stable")
-
-    ks = np.empty((8, n), dtype=np.int64)
-    a1s, a1e, a2s, a2e, a3s, a3e, arel, aq = ks
-    kept: list[tuple] = []
-    k = 0
-    for oi in order:
-        item = results[int(oi)]
-        m1, m2, m3 = item[1], item[2], item[5]
-        if k:
-            ov1 = ((a1s[:k] <= m1[0]) & (m1[0] <= a1e[:k])) | (
-                (m1[0] <= a1s[:k]) & (a1s[:k] <= m1[1]))
-            ov2 = ((a2s[:k] <= m2[0]) & (m2[0] <= a2e[:k])) | (
-                (m2[0] <= a2s[:k]) & (a2s[:k] <= m2[1]))
-            ov3 = ((a3s[:k] <= m3[0]) & (m3[0] <= a3e[:k])) | (
-                (m3[0] <= a3s[:k]) & (a3s[:k] <= m3[1]))
-            clash = (
-                (arel[:k] == item[3]) & ov1 & ov2
-                & (aq[:k] == item[6]) & ov3
-            ).any()
-            if clash:
-                continue
-        kept.append(item)
-        a1s[k] = m1[0]; a1e[k] = m1[1]  # noqa: E702
-        a2s[k] = m2[0]; a2e[k] = m2[1]  # noqa: E702
-        a3s[k] = m3[0]; a3e[k] = m3[1]  # noqa: E702
-        arel[k] = item[3]; aq[k] = item[6]  # noqa: E702
-        k += 1
-
-    out = []
-    for score, m1, m2, pred, q_score, m3, q_pred in kept:
-        out.append(
-            (m1[0], m1[1], m2[0], m2[1], label_list[pred],
-             m3[0], m3[1], label_list[q_pred], score, q_score))
-    return out
-
-
-# i<j<k anchor index triples per entity count, cached: the meshgrid +
-# mask build was ~25% of a small sentence's decode and is a pure function
-# of E (bounded by max mentions per sentence, so the cache stays tiny)
-_ANCHOR_CACHE: dict[int, tuple] = {}
-
-
-def _anchor_triples(e: int) -> tuple:
-    got = _ANCHOR_CACHE.get(e)
-    if got is None:
-        idx = np.arange(e, dtype=np.int64)
-        ii, jj, kk = np.meshgrid(idx, idx, idx, indexing="ij")
-        sel = (ii < jj) & (jj < kk)
-        got = _ANCHOR_CACHE[e] = (ii[sel], jj[sel], kk[sel])
-    return got
+    ]), label_list)
 
 
 def decode_sentences_batch(
@@ -213,61 +250,46 @@ def decode_sentences_batch(
     input order.  Each row is
     (m1s, m1e, m2s, m2e, rel_name, m3s, m3e, qual_name, rel_score, q_score).
 
-    ``unidirect`` sentences go to :func:`decode_sentence_unidirect`;
-    ``same_entity`` sentences and those without the full E^3 candidate
-    grid (E < 3, pruned spans) go to :func:`decode_sentence_arrays`.  The
-    rest are grouped by entity count and decoded as ONE (B, E, E, E, C)
-    tensor pipeline: in the full-grid case the candidate rows are exactly
-    lexicographic (i, j, k) order, so the per-sentence scatter is a pure
-    reshape.  Anchors are the i<j<k index triples in lexicographic order
-    (= first-encountered orientation under the reference's
-    insertion-ordered dict walk); np.nonzero flattens row-major, so within
-    each sentence candidate order (and therefore NMS input order) is the
-    loop's.  Outputs are bit-identical to the loop
-    (tests/test_decode_parity.py).
+    ``unidirect`` sentences go to :func:`decode_sentence_unidirect`.  Every
+    other sentence with candidates — full or pruned grid, any entity count,
+    either ``same_entity`` — joins its entity-count group, and each group
+    decodes as ONE (B, E, E, E, C) pipeline: :func:`_scatter`,
+    :func:`_ensemble`, argmax at the :func:`_anchors`, direction
+    normalization, per-sentence :func:`_nms`.  np.nonzero flattens
+    row-major, so within each sentence the NMS input order is the loop's.
+    Outputs are bit-identical to the loop :func:`decode_sentence_arrays`
+    and the oracle (tests/test_decode_parity.py,
+    tests/test_decode_pipeline.py).
     """
-    out: list = [None] * len(items)
+    out: list = [[] for _ in items]
     groups: dict[int, list[int]] = {}
     for ix, (ents, cand, lo, hi) in enumerate(items):
-        e = ents.shape[0]
         if unidirect:
             out[ix] = decode_sentence_unidirect(
                 ents, cand, rel_all[lo:hi], q_all[lo:hi], space, same_entity)
-        elif not same_entity and e >= 3 and cand.shape[0] == e * e * e:
-            groups.setdefault(e, []).append(ix)
-        else:
-            out[ix] = decode_sentence_arrays(
-                ents, cand, rel_all[lo:hi], q_all[lo:hi], space,
-                same_entity, strict)
+        elif cand.shape[0]:
+            groups.setdefault(ents.shape[0], []).append(ix)
 
-    c = space.num_classes
     sw = space.swap_index()
     label_list = space.label_list
     for e, idxs in groups.items():
-        nb = len(idxs)
-        s = np.empty((nb, e * e * e, c), dtype=np.float64)
-        q = np.empty((nb, e * e * e, c), dtype=np.float64)
-        for b, ix in enumerate(idxs):
-            _ents, _cand, lo, hi = items[ix]
-            s[b] = rel_all[lo:hi]
-            q[b] = q_all[lo:hi]
-        v, qc = _ensemble(s.reshape(nb, e, e, e, c),
-                          q.reshape(nb, e, e, e, c), sw)
-
-        ii, jj, kk = _anchor_triples(e)
-        pred = np.argmax(v[:, ii, jj, kk, :], axis=-1)
-        q_pred = np.argmax(qc[:, ii, jj, kk, :], axis=-1)
-        # row-major: per-sentence candidate order kept
-        bs, asel = np.nonzero((pred > 0) & (q_pred > 0))
-        iia, jja, kka = ii[asel], jj[asel], kk[asel]
-        a1, a2, a3 = iia.copy(), jja.copy(), kka.copy()
-        pr = pred[bs, asel]
-        qp = q_pred[bs, asel]
+        group = [items[ix] for ix in idxs]
+        dense, present = _scatter(group, {"v": rel_all, "q": q_all}, e)
+        ens = _ensemble(dense, HYPERRELATION, sw)
+        v, qc = ens["v"], ens["q"]
+        bs, ii, jj, kk = _anchors(
+            present, np.stack([it[0] for it in group]), same_entity, strict)
+        pred = np.argmax(v[bs, ii, jj, kk], axis=-1)
+        q_pred = np.argmax(qc[bs, ii, jj, kk], axis=-1)
+        hit = np.nonzero((pred > 0) & (q_pred > 0))[0]
+        bs, ii, jj, kk = bs[hit], ii[hit], jj[hit], kk[hit]
+        a1, a2, a3 = ii.copy(), jj.copy(), kk.copy()
+        pr, qp = pred[hit], q_pred[hit]
         ok = np.nonzero(_normalize_direction(a1, a2, a3, pr, qp, space))[0]
         # run_re.py:1417-1418 — scores index the BASE-orientation ensemble
         # vectors at the direction-NORMALIZED labels, not at the argmax
-        sc = v[bs, iia, jja, kka, pr]
-        qsc = qc[bs, iia, jja, kka, qp]
+        sc = v[bs, ii, jj, kk, pr]
+        qsc = qc[bs, ii, jj, kk, qp]
 
         bs_ok = bs[ok]
         for b, ix in enumerate(idxs):
@@ -287,20 +309,24 @@ def decode_sentence_arrays(
     same_entity: bool = False,
     strict: bool = True,
 ) -> list[tuple]:
-    """Decode one sentence with the reference's loop — the reference
-    implementation the batched groups are tested against.  Returns
-    output_preds rows in emission order:
+    """Decode one sentence with the reference's visited-walk loop over
+    the pipeline's own :func:`_scatter` and :func:`_ensemble`.  No
+    production path calls it: it is the array-side reference the tests
+    compare :func:`decode_sentences_batch` (its vectorized anchor walk and
+    NMS input order) against.  Returns output_preds rows in emission order:
     (m1s, m1e, m2s, m2e, rel_name, m3s, m3e, qual_name, rel_score, q_score).
     """
     e = entities.shape[0]
     if e == 0 or cand.shape[0] == 0:
         return []
-    v, qc, present = ensemble_tensors(e, cand, rel_lg, q_lg, space)
+    dense, present = _scatter(
+        [(entities, cand, 0, cand.shape[0])], {"v": rel_lg, "q": q_lg}, e)
+    ens = _ensemble(dense, HYPERRELATION, space.swap_index())
+    v, qc, present = ens["v"][0], ens["q"][0], present[0]
 
     pv = np.argmax(v, axis=-1)
     pq = np.argmax(qc, axis=-1)
 
-    label_list = space.label_list
     num_label = space.num_label
     n_sym = 1
     is_k = space.is_k()
@@ -354,7 +380,7 @@ def decode_sentence_arrays(
                 (float(v[i, j, k, pred]), m1, m2, pred,
                  float(qc[i, j, k, q_pred]), m3, q_pred))
 
-    return _nms(results, label_list)
+    return _project(_nms(results), space.label_list)
 
 
 def decode_sentence_unidirect(

@@ -1,11 +1,14 @@
-"""Vectorized decode for the event / role / hypergraph n-ary schemas
-(run_re.py:1519-1751, 1764-1975, 1979-2174).
+"""Decode for the event / role / hypergraph n-ary schemas
+(run_re.py:1519-1751, 1764-1975, 1979-2174) on decode_core's pipeline:
+``_scatter`` -> ``_ensemble`` -> ``_anchors`` -> argmax at the anchors ->
+schema mask -> ``_nms`` -> project.
 
 Unlike hyperrelation, these schemas have separate (non-bidirectional)
 relation and qualifier label spaces and no half-block swaps; the 6-way
 ensemble instead SHUFFLES the per-mention heads (q = m3's label head,
 qb = m1's, qc = m2's) so each head follows its mention through the
-permutation.  Faithful quirks preserved:
+permutation — that shuffle is each schema's ``_ensemble`` table.  Faithful
+quirks preserved:
 
 * event/role selection tests ``qb_pred`` for truthiness, not > 0
   (run_re.py:1637, 1870);
@@ -20,87 +23,39 @@ transcriptions in reference_oracle.py.
 
 from __future__ import annotations
 
+from itertools import permutations
+
 import numpy as np
 
-# np.transpose axes that realize X[i,j,k] = S[perm] (see decode_core)
-_AX = {
-    "jik": (1, 0, 2), "ikj": (0, 2, 1), "jki": (2, 0, 1),
-    "kij": (1, 2, 0), "kji": (2, 1, 0),
+from text2nkg_spark.decode_core import _anchors, _ensemble, _nms, _scatter
+
+# per-schema _ensemble tables: for each of the 5 non-base orderings (k213,
+# k132, k231, k312, k321 — in the reference's addition order), which
+# source head feeds each target head; no half-swaps.  heads are named v,
+# q, qb, qc.  Head widths differ per schema (event: v is relation-space,
+# q/qb/qc are qualifier-space), but every shuffle mixes same-width heads.
+_TABLES = {
+    "event": (
+        ("jik", {"v": "v", "q": "q", "qb": "qc", "qc": "qb"}, ()),
+        ("ikj", {"v": "v", "q": "qc", "qb": "qb", "qc": "q"}, ()),
+        ("jki", {"v": "v", "q": "qb", "qb": "qc", "qc": "q"}, ()),
+        ("kij", {"v": "v", "q": "qc", "qb": "q", "qc": "qb"}, ()),
+        ("kji", {"v": "v", "q": "qb", "qb": "q", "qc": "qc"}, ()),
+    ),
+    "role": (
+        ("jik", {"v": "qb", "q": "q", "qb": "v"}, ()),
+        ("ikj", {"v": "q", "q": "v", "qb": "qb"}, ()),
+        ("jki", {"v": "qb", "q": "v", "qb": "q"}, ()),
+        ("kij", {"v": "qb", "q": "v", "qb": "q"}, ()),
+        ("kji", {"v": "v", "q": "q", "qb": "qb"}, ()),
+    ),
+    "hypergraph": tuple(
+        (o, {"v": "v", "q": "q"}, ())
+        for o in ("jik", "ikj", "jki", "kij", "kji")),
 }
-
-# per-schema: for each of the 5 non-base orderings (k213, k132, k231, k312,
-# k321 — in the reference's addition order), which source head feeds each
-# target head.  heads are named v, q, qb, qc.
-_EVENT = (
-    ("jik", {"v": "v", "q": "q", "qb": "qc", "qc": "qb"}),
-    ("ikj", {"v": "v", "q": "qc", "qb": "qb", "qc": "q"}),
-    ("jki", {"v": "v", "q": "qb", "qb": "qc", "qc": "q"}),
-    ("kij", {"v": "v", "q": "qc", "qb": "q", "qc": "qb"}),
-    ("kji", {"v": "v", "q": "qb", "qb": "q", "qc": "qc"}),
-)
-_ROLE = (
-    ("jik", {"v": "qb", "q": "q", "qb": "v"}),
-    ("ikj", {"v": "q", "q": "v", "qb": "qb"}),
-    ("jki", {"v": "qb", "q": "v", "qb": "q"}),
-    ("kij", {"v": "qb", "q": "v", "qb": "q"}),
-    ("kji", {"v": "v", "q": "q", "qb": "qb"}),
-)
-_HYPERGRAPH = (
-    ("jik", {"v": "v", "q": "q"}),
-    ("ikj", {"v": "v", "q": "q"}),
-    ("jki", {"v": "v", "q": "q"}),
-    ("kij", {"v": "v", "q": "q"}),
-    ("kji", {"v": "v", "q": "q"}),
-)
-_PERMS = {"event": _EVENT, "role": _ROLE, "hypergraph": _HYPERGRAPH}
-
-
-def _ensemble_multi(e: int, cand: np.ndarray, heads: dict, schema: str):
-    """Dense (E,E,E,C_head) per-head tensors + the 6-way ensembled sums.
-
-    Head widths differ per schema (event: v is relation-space, q/qb/qc are
-    qualifier-space; role: all qualifier-space; hypergraph: both
-    relation-space) — but every head-shuffle in the reference only ever
-    mixes same-width heads."""
-    dense = {}
-    ii, jj, kk = cand[:, 1], cand[:, 2], cand[:, 3]
-    for name, lg in heads.items():
-        t = np.zeros((e, e, e, lg.shape[1]), dtype=np.float64)
-        t[ii, jj, kk] = lg
-        dense[name] = t
-    present = np.zeros((e, e, e), dtype=bool)
-    present[ii, jj, kk] = True
-
-    out = {name: dense[name].copy() for name in heads}
-    for axname, mapping in _PERMS[schema]:
-        ax = _AX[axname] + (3,)
-        for target, source in mapping.items():
-            out[target] += np.transpose(dense[source], ax)
-    return out, present
-
-
-def _nms_multi(results: list[tuple], extra_eq: int) -> list[tuple]:
-    """Greedy NMS: clash requires equal pred + q_pred (+ ``extra_eq`` more
-    trailing label fields) and triple-wise span overlap.
-    Result tuples: (score, m1, m2, pred, q_score, m3, q_pred, *extras)."""
-
-    def ov(a, b):
-        return (b[0] <= a[0] <= b[1]) or (a[0] <= b[0] <= a[1])
-
-    order = np.argsort(-np.array([r[0] for r in results]), kind="stable")
-    kept: list[tuple] = []
-    for oi in order:
-        it = results[int(oi)]
-        clash = False
-        for x in kept:
-            if (it[3] == x[3] and ov(it[1], x[1]) and ov(it[2], x[2])
-                    and it[6] == x[6] and ov(it[5], x[5])
-                    and all(it[7 + z] == x[7 + z] for z in range(extra_eq))):
-                clash = True
-                break
-        if not clash:
-            kept.append(it)
-    return kept
+# trailing labels past (pred, q_pred) that NMS also compares: event keeps
+# (qb, qc), role keeps qb
+_N_EXTRA = {"event": 2, "role": 1, "hypergraph": 0}
 
 
 def decode_sentence_multi(
@@ -112,59 +67,36 @@ def decode_sentence_multi(
     q_label_list: list[str],   # NIL + qualifier/role names
     same_entity: bool = False,
 ) -> list[tuple]:
-    """Returns schema-shaped output_preds (see reference_oracle)."""
+    """Returns schema-shaped output_preds (see reference_oracle).  A
+    triple missing one of its orderings raises ``MissingOrderingError``
+    (a ``ValueError``), as the reference asserts."""
     e = entities.shape[0]
     if e == 0 or cand.shape[0] == 0:
         return []
-    ens, present = _ensemble_multi(e, cand, heads, schema)
-    arg = {name: np.argmax(t, axis=-1) for name, t in ens.items()}
+    dense, present = _scatter([(entities, cand, 0, cand.shape[0])], heads, e)
+    ens = _ensemble(dense, _TABLES[schema])
+    b, ii, jj, kk = _anchors(present, entities[None], same_entity, strict=True)
+    at = {name: t[b, ii, jj, kk] for name, t in ens.items()}
+    arg = {name: np.argmax(x, axis=-1) for name, x in at.items()}
+
+    pred = arg["v"]
+    q_pred = pred if schema == "hypergraph" else arg["q"]
+    keep = pred > 0
+    extras: tuple = ()
+    if schema != "hypergraph":
+        keep &= (q_pred > 0) & (arg["qb"] != 0)  # qb: truthiness
+        extras = (arg["qb"],)
+    if schema == "event":
+        keep &= arg["qc"] > 0
+        extras += (arg["qc"],)
 
     spans = [tuple(int(x) for x in row) for row in entities]
-    visited = np.zeros((e, e, e), dtype=bool)
-    results: list[tuple] = []
-    perms = ((1, 0, 2), (0, 2, 1), (1, 2, 0), (2, 0, 1), (2, 1, 0))
-
-    for row in cand:
-        i, j, k = int(row[1]), int(row[2]), int(row[3])
-        if visited[i, j, k]:
-            continue
-        visited[i, j, k] = True
-        m1, m2, m3 = spans[i], spans[j], spans[k]
-        if not same_entity and (m1 == m2 or m2 == m3 or m3 == m1):
-            continue
-        idx = (i, j, k)
-        for p in perms:
-            a, b, c_ = idx[p[0]], idx[p[1]], idx[p[2]]
-            if not present[a, b, c_]:
-                raise ValueError("missing ordering (pruned span)")
-            visited[a, b, c_] = True
-
-        pred = int(arg["v"][i, j, k])
-        q_pred = int(arg["q"][i, j, k]) if schema != "hypergraph" else pred
-        v_t, q_t = ens["v"], ens["q"]
-        if schema == "event":
-            qb = int(arg["qb"][i, j, k])
-            qc = int(arg["qc"][i, j, k])
-            if pred > 0 and q_pred > 0 and qb and qc > 0:
-                results.append(
-                    (float(v_t[i, j, k, pred]), m1, m2, pred,
-                     float(q_t[i, j, k, q_pred]), m3, q_pred, qb, qc))
-        elif schema == "role":
-            qb = int(arg["qb"][i, j, k])
-            if pred > 0 and q_pred > 0 and qb:
-                results.append(
-                    (float(v_t[i, j, k, pred]), m1, m2, pred,
-                     float(q_t[i, j, k, q_pred]), m3, q_pred, qb))
-        else:  # hypergraph
-            if pred > 0:
-                results.append(
-                    (float(v_t[i, j, k, pred]), m1, m2, pred,
-                     float(q_t[i, j, k, q_pred]), m3, q_pred))
-
-    if not results:
-        return []
-    extra = {"event": 2, "role": 1, "hypergraph": 0}[schema]
-    kept = _nms_multi(results, extra)
+    kept = _nms([
+        (float(at["v"][w, pred[w]]), spans[ii[w]], spans[jj[w]], int(pred[w]),
+         float(at["q"][w, q_pred[w]]), spans[kk[w]], int(q_pred[w]),
+         *(int(x[w]) for x in extras))
+        for w in np.nonzero(keep)[0]
+    ], _N_EXTRA[schema])
 
     out = []
     for it in kept:
@@ -212,8 +144,6 @@ def gold_orderings_multi(
                 lab = {h: q_label_map[x["role_h"]],
                        t: q_label_map[x["rel"]],
                        qs: q_label_map[q["label"]]}
-            from itertools import permutations
-
             for m1, m2, m3 in permutations((h, t, qs), 3):
                 key = m1 + m2 + m3
                 if schema == "event":

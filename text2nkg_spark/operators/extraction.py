@@ -177,10 +177,11 @@ def _entity_spans(starts, ends) -> np.ndarray:
         [np.asarray(starts, dtype=np.int64), np.asarray(ends, dtype=np.int64)])
 
 
-def _check_input(df, cfg: PipelineConfig) -> bool:
-    """Plan-time check shared by both UDFs, so a bad input or config fails
-    on the driver, not inside an executor.  Returns whether the gold
-    scorer reads ``gold_relations``."""
+def _check_input(columns: list[str], cfg: PipelineConfig) -> bool:
+    """Plan-time check of an input's ``columns`` and the config, shared by
+    both UDFs and ``run_pipeline``, so a bad input or config fails on the
+    driver before any work, not inside an executor.  Returns whether the
+    gold scorer reads ``gold_relations``."""
     if cfg.nary_schema != "hyperrelation":
         raise ValueError(
             f"nary_schema={cfg.nary_schema!r}: this path extracts "
@@ -188,7 +189,7 @@ def _check_input(df, cfg: PipelineConfig) -> bool:
             "extract_facts_multi for the event/role/hypergraph schemas")
     if cfg.scorer != "gold":
         return False
-    if "gold_relations" not in df.columns:
+    if "gold_relations" not in columns:
         raise ValueError(
             "scorer='gold' needs a gold_relations column: build the input "
             "with prepare_sentences(transcripts, gold)")
@@ -274,7 +275,7 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
     cfg.scorer == 'gold' (ValueError here when it is missing).  Each Arrow
     batch is enumerated, scored and decoded as one unit (module docstring).
     """
-    use_gold = _check_input(df, cfg)
+    use_gold = _check_input(df.columns, cfg)
     strict = cfg.tokenizer == "identity"  # pruned orderings: wordpiece only
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -362,7 +363,7 @@ def score_candidates(df, cfg: PipelineConfig, space: LabelSpace):
     scale, follow with ``.repartition(N, 'conv_id', 'turn_idx', 'sub_lo')``
     before an expensive model scorer.
     """
-    use_gold = _check_input(df, cfg)
+    use_gold = _check_input(df.columns, cfg)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tokenizer = _make_tokenizer(cfg)

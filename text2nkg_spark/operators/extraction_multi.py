@@ -201,11 +201,12 @@ def extract_facts_multi(norm_df, schema: str, cfg: PipelineConfig,
                 "m1s", "m1e", "m1_label", "m2s", "m2e", "m2_label",
                 "m3s", "m3e", "m3_label"]
         for pdf in batches:
+            col = {c: pdf[c].to_numpy() for c in pdf.columns}
             out: list[tuple] = []
             for r in range(len(pdf)):
-                doc_id = int(pdf["doc_id"].iat[r])
-                sent_idx = int(pdf["sent_idx"].iat[r])
-                ner = pdf["ner"].iat[r]
+                doc_id = int(col["doc_id"][r])
+                sent_idx = int(col["sent_idx"][r])
+                ner = col["ner"][r]
                 if ner is None or len(ner) == 0:
                     continue
                 ents = np.asarray(
@@ -219,9 +220,9 @@ def extract_facts_multi(norm_df, schema: str, cfg: PipelineConfig,
                 cand = enumerate_triples(ents, cfg.max_seq_length)
                 if cand.shape[0] == 0:
                     continue
-                gold = (_rel_cell_to_dicts(pdf["relations"].iat[r])
+                gold = (_rel_cell_to_dicts(col["relations"][r])
                         if cfg.scorer == "gold" else None)
-                toks = (list(pdf["tokens"].iat[r])
+                toks = (list(col["tokens"][r])
                         if cfg.scorer == "model" else None)
                 heads = score_heads(
                     schema, cfg, labels, doc_id, sent_idx, cand, gold,

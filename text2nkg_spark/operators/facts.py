@@ -61,11 +61,29 @@ def qualifier_triples(facts: DataFrame) -> DataFrame:
     )
 
 
-def _json_escape(col):
-    # our token vocabulary is alnum/underscore/bracket — only quotes and
-    # backslashes would need escaping; keep the expression exact anyway
-    return F.regexp_replace(
-        F.regexp_replace(col, r"\\", r"\\\\"), '"', r'\"')
+# json.dumps' two-character escapes; every other character outside
+# printable ASCII becomes \uXXXX per UTF-16 code unit (ensure_ascii)
+_JSON_SHORT = {'"': '\\"', "\\": "\\\\", "\n": "\\n", "\r": "\\r",
+               "\t": "\\t", "\b": "\\b", "\f": "\\f"}
+
+
+def json_escape(col):
+    """A string column as the body of its ``json.dumps`` (``ensure_ascii``)
+    literal, without the quotes — the one escaper of the predicted and the
+    gold canonical JSON.  Printable-ASCII strings without ``"`` or ``\\``
+    pass unchanged; any other string is rebuilt code point by code point:
+    short escapes, printable ASCII as is, the rest as ``\\uXXXX`` (a
+    surrogate pair for an astral character, as ``json.dumps`` writes it)."""
+    def char(ch):
+        out = F.when(ch.rlike("[ -~]"), ch).otherwise(F.regexp_replace(
+            F.lower(F.hex(F.encode(ch, "UTF-16BE"))), "(.{4})", r"\\u$1"))
+        for raw, short in _JSON_SHORT.items():
+            out = F.when(ch == raw, short).otherwise(out)
+        return out
+
+    return F.when(col.rlike(r"\A[ !#-\[\]-~]*\z"), col).otherwise(
+        F.array_join(F.transform(
+            F.regexp_extract_all(col, F.lit("(?s)(.)"), 1), char), ""))
 
 
 def compacted_facts(facts: DataFrame, per: str = "turn") -> DataFrame:
@@ -109,8 +127,8 @@ def compacted_facts(facts: DataFrame, per: str = "turn") -> DataFrame:
     qual_json = quals.withColumn(
         "qual_json",
         F.concat(
-            F.lit('"'), _json_escape(F.col("qual")), F.lit('": ["'),
-            F.array_join(F.transform("values", _json_escape), '", "'),
+            F.lit('"'), json_escape(F.col("qual")), F.lit('": ["'),
+            F.array_join(F.transform("values", json_escape), '", "'),
             F.lit('"]'),
         ),
     ).withColumn("n_vals", F.size("values"))
@@ -133,9 +151,9 @@ def compacted_facts(facts: DataFrame, per: str = "turn") -> DataFrame:
             "canonical_json",
             F.concat(
                 F.lit('{"N": '), F.col("N"),
-                F.lit(', "relation": "'), _json_escape(F.col("rel")),
-                F.lit('", "subject": "'), _json_escape(F.col("subj")),
-                F.lit('", "object": "'), _json_escape(F.col("obj")),
+                F.lit(', "relation": "'), json_escape(F.col("rel")),
+                F.lit('", "subject": "'), json_escape(F.col("subj")),
+                F.lit('", "object": "'), json_escape(F.col("obj")),
                 F.lit('", '), F.col("quals_json"), F.lit("}"),
             ),
         )

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from text2nkg_spark.operators.facts import json_escape
+
 
 def gold_relation_pairs(gold: DataFrame) -> DataFrame:
     """Both-direction golden relation set (run_re.py:336-340).
@@ -303,7 +305,9 @@ def gold_compacted_json(gold_with_tokens: DataFrame) -> DataFrame:
 
     Preserves the reference's ``att`` accumulation quirk: qualifier value
     j is the concatenation of the texts of qualifiers 0..j of that relation
-    (the accumulator string is never reset between qualifiers).
+    (the accumulator string is never reset between qualifiers).  Labels and
+    texts go through ``facts.json_escape``, the predicted side's escaper,
+    so both sides equal ``json.dumps``.
 
     Input: (conv_id, turn_idx, tokens: array<string>, relations: array<...>).
     Output: one row per gold relation with ``canonical_json``.
@@ -320,10 +324,10 @@ def gold_compacted_json(gold_with_tokens: DataFrame) -> DataFrame:
         "atts",
         F.transform(
             F.col("x.quals"),
-            lambda q, i: F.concat_ws(
+            lambda q, i: json_escape(F.concat_ws(
                 "",
                 F.transform(
-                    F.slice(F.col("x.quals"), F.lit(1), i + 1), piece)),
+                    F.slice(F.col("x.quals"), F.lit(1), i + 1), piece))),
         ),
     )
     # first-occurrence-ordered distinct qualifier labels
@@ -343,7 +347,7 @@ def gold_compacted_json(gold_with_tokens: DataFrame) -> DataFrame:
             F.transform(
                 "qlabels",
                 lambda lab: F.concat(
-                    F.lit('"'), lab, F.lit('": ["'),
+                    F.lit('"'), json_escape(lab), F.lit('": ["'),
                     F.array_join(
                         F.filter(
                             F.zip_with(
@@ -367,9 +371,11 @@ def gold_compacted_json(gold_with_tokens: DataFrame) -> DataFrame:
         F.concat(
             F.lit('{"N": '),
             (F.lit(2) + F.size(F.col("x.quals"))).cast("int"),
-            F.lit(', "relation": "'), F.col("x.rel"),
-            F.lit('", "subject": "'), span_text(F.col("x.h_s"), F.col("x.h_e")),
-            F.lit('", "object": "'), span_text(F.col("x.t_s"), F.col("x.t_e")),
+            F.lit(', "relation": "'), json_escape(F.col("x.rel")),
+            F.lit('", "subject": "'),
+            json_escape(span_text(F.col("x.h_s"), F.col("x.h_e"))),
+            F.lit('", "object": "'),
+            json_escape(span_text(F.col("x.t_s"), F.col("x.t_e"))),
             F.lit('", '), F.col("quals_json"), F.lit("}"),
         ).alias("canonical_json"),
     )

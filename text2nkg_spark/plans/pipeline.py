@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from text2nkg_spark.config import PipelineConfig
 from text2nkg_spark.labels import LabelSpace, make_synthetic_labels
-from text2nkg_spark.operators.extraction import extract_facts_fused
+from text2nkg_spark.operators.extraction import (
+    _check_input, extract_facts_fused)
 from text2nkg_spark.operators.facts import (
     compacted_facts, fact_table, main_triples, qualifier_triples)
 from text2nkg_spark.operators.mentions import detect_mentions
@@ -129,13 +130,16 @@ def run_pipeline(
     from text2nkg_spark.operators.mentions import sentence_surfaces
     from text2nkg_spark.plans.manifest import StageManifest, input_fingerprint
 
+    gold_in = gold if cfg.scorer == "gold" else None
+    # the predictions stage's plan-time check, made before any stage is
+    # written: `sentences` carries gold_relations iff the gold table joins
+    _check_input(["gold_relations"] if gold_in is not None else [], cfg)
     space = space or default_label_space()
     man = StageManifest(out_root)
     fp = input_fingerprint(transcripts)
     # the gold table is an input too: of `sentences` (so of every fp2
     # stage) when the gold scorer joins it, and of `metrics` when given
     fp_gold = "" if gold is None else f"|gold={input_fingerprint(gold)}"
-    gold_in = gold if cfg.scorer == "gold" else None
     fp_sents = fp if gold_in is None else fp + fp_gold
 
     sents = man.run_stage(
