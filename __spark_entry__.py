@@ -542,8 +542,9 @@ def _gold_multi_corpus(spark, sf_dir, schema):
     d = F.col("doc_id")
     two = (d % 2).cast("int")
     p = (d % 6).cast("int")
-    starts = F.array(F.lit(1).cast("int"), two + 3, two + 5)
-    ends = F.array((two + 1).cast("int"), two + 3, two + 5)
+    m_starts = [F.lit(1).cast("int"), two + 3, two + 5]
+    m_ends = [(two + 1).cast("int"), two + 3, two + 5]
+    starts, ends = F.array(*m_starts), F.array(*m_ends)
     hi = F.element_at(F.array(*[F.lit(x) for x in _PERM_H]), p + 1)
     ti = F.element_at(F.array(*[F.lit(x) for x in _PERM_T]), p + 1)
     qi = F.element_at(F.array(*[F.lit(x) for x in _PERM_Q]), p + 1)
@@ -579,8 +580,11 @@ def _gold_multi_corpus(spark, sf_dir, schema):
             ss(qi).alias("q_s"), se(qi).alias("q_e"),
             qlab.alias("label"))).alias("quals"),
         role_h.alias("role_h"), role_t.alias("role_t")))
+    # each mention's own span expressions: element_at(starts, m + 1) on a
+    # literal m does not compile under whole-stage codegen (Janino "is not
+    # an rvalue")
     ner = F.array(*[
-        F.struct(ss(F.lit(m)).alias("start"), se(F.lit(m)).alias("end"),
+        F.struct(m_starts[m].alias("start"), m_ends[m].alias("end"),
                  F.lit("Entity").alias("label"))
         for m in range(3)])
     return docs.select(

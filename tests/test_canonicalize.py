@@ -234,3 +234,28 @@ def test_rekey_broadcast_is_conditional(spark):
     keyed_p = rekey_facts_to_entities(
         facts, small["surface_to_entity"].select("surface", "entity_id"))
     assert "ResolvedHint" in keyed_p._jdf.queryExecution().analyzed().toString()
+
+
+def test_run_pipeline_decides_the_rekey_join_from_the_manifest(
+        spark, monkeypatch, tmp_path):
+    """run_pipeline passes a decided broadcast_map (from the
+    surface_to_entity manifest's row count), never None: None starts the
+    size-probe job on every build."""
+    from text2nkg_spark.config import DataGenConfig, PipelineConfig
+    from text2nkg_spark.datagen import gen_transcripts_pdf
+    from text2nkg_spark.operators import canonicalize
+    from text2nkg_spark.plans.pipeline import run_pipeline
+
+    seen = []
+    rekey = canonicalize.rekey_facts_to_entities
+
+    def recording_rekey(facts, s2e, broadcast_map=None):
+        seen.append(broadcast_map)
+        return rekey(facts, s2e, broadcast_map=broadcast_map)
+
+    monkeypatch.setattr(canonicalize, "rekey_facts_to_entities",
+                        recording_rekey)
+    tr = spark.createDataFrame(gen_transcripts_pdf(
+        DataGenConfig(n_convs=4, turns_per_conv=4, seed=5)))
+    run_pipeline(spark, tr, str(tmp_path / "out"), PipelineConfig())
+    assert seen == [True]

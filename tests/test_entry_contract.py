@@ -165,3 +165,24 @@ def test_rows_only_counts_pinned(spark, name):
     assert got == golden[name], (
         f"{name}@{sf_key}: {got} rows vs pinned {golden[name]} — if this "
         "change is intended, update _ROWS_ONLY_GOLDEN with a comment")
+
+
+@pytest.mark.parametrize("schema", ["event", "role", "hypergraph"])
+def test_gold_multi_corpus_compiles_whole_stage(spark, schema):
+    """The planted multi-schema corpora run under whole-stage codegen with
+    no interpreted fallback, and still equal their DuckDB oracles."""
+    name = f"nkg_gold_{schema}_extract"
+    key = "spark.sql.codegen.fallback"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = entry_mod.queries()[name](spark, SF)
+        got = [tuple(r) for r in df.collect()]
+    finally:
+        spark.conf.set(key, prev)
+    con = _duck(SF)
+    cur = con.execute(entry_mod.oracle_sql()[name])
+    want = cur.fetchall()
+    want_cols = [c[0] for c in cur.description]
+    assert _rows_multiset(list(df.columns), got) == _rows_multiset(
+        want_cols, want)

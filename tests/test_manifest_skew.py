@@ -220,3 +220,207 @@ def test_resume_key_covers_semantic_config(spark, tr, tmp_path_factory):
                  PipelineConfig(scorer="hash", eval_unidirect=True))
     fp_uni = man.read_meta("predictions")["input_fingerprint"]
     assert fp_uni not in (fp_before, fp_after)
+
+
+@pytest.fixture
+def parquet_in(spark, tmp_path):
+    """GEN's turns as three plain parquet files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pdf = gen_transcripts_pdf(GEN)
+    pdf["ts"] = pdf["ts"].astype("datetime64[us, UTC]")
+    root = tmp_path / "in"
+    root.mkdir()
+    for i, lo in enumerate(range(0, len(pdf), 50)):
+        pq.write_table(pa.Table.from_pandas(pdf.iloc[lo:lo + 50],
+                                            preserve_index=False),
+                       str(root / f"part-{i:05d}.parquet"))
+    return str(root)
+
+
+def test_file_scan_key_covers_the_plan_and_runs_no_job(spark, parquet_in):
+    """The same files read plain, filtered and projected give three keys,
+    none of them from a Spark job."""
+    frames = {
+        "plain": spark.read.parquet(parquet_in),
+        "filtered": spark.read.parquet(parquet_in).where("turn_idx > 2"),
+        "projected": spark.read.parquet(parquet_in).select(
+            "conv_id", "turn_idx", "text"),
+    }
+    keys = {}
+    for name, df in frames.items():
+        assert _jobs_started(spark, f"fp_{name}", lambda: keys.update(
+            {name: input_fingerprint(df)})) == 0
+    assert len(set(keys.values())) == 3
+    # a fresh read of the same files keys the same
+    assert input_fingerprint(spark.read.parquet(parquet_in)) == keys["plain"]
+
+
+def test_file_scan_key_sees_a_rewritten_file(spark, parquet_in):
+    """Rewriting one input file in place, one row changed, changes the
+    key, and keying the rewritten input runs no Spark job either."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    before = input_fingerprint(spark.read.parquet(parquet_in))
+    path = sorted(glob.glob(os.path.join(parquet_in, "*.parquet")))[1]
+    table = pq.read_table(path)
+    pdf = table.to_pandas()
+    pdf.loc[7, "text"] = pdf.loc[7, "text"].swapcase()
+    pq.write_table(pa.Table.from_pandas(pdf, schema=table.schema,
+                                        preserve_index=False), path)
+    df = spark.read.parquet(parquet_in)
+    after = []
+    assert _jobs_started(spark, "fp_rewritten", lambda: after.append(
+        input_fingerprint(df))) == 0
+    assert after[0] != before
+
+
+def test_udf_bodies_fall_back_to_the_row_hash(spark, parquet_in):
+    """Two Python UDFs of one name, different bodies: the plan text shows
+    only the name, so the key comes from the rows, and differs."""
+    df = spark.read.parquet(parquet_in)
+    keys = [input_fingerprint(df.select(
+        "conv_id", F.udf(body, "string")("text").alias("text")))
+        for body in (lambda t: t.upper(), lambda t: t.lower())]
+    assert keys[0] != keys[1]
+    assert not any(k.startswith("files|") for k in keys)
+
+
+def test_local_input_keeps_the_row_hash(spark):
+    """A createDataFrame input is no file scan: its key is the row hash
+    (schema | count | multiset hash; test_fingerprint_covers_every_row)."""
+    tr = spark.createDataFrame(gen_transcripts_pdf(GEN))
+    schema, n, _h = input_fingerprint(tr).rsplit("|", 2)
+    assert (schema, int(n)) == (tr.schema.simpleString(), len(
+        gen_transcripts_pdf(GEN)))
+
+
+def test_cached_file_scan_keeps_the_row_hash(spark, parquet_in):
+    """A cached read serves the rows the cache holds, whatever the files
+    hold now, so its key comes from those rows."""
+    df = spark.read.parquet(parquet_in).where("turn_idx > 0").cache()
+    try:
+        assert not input_fingerprint(df).startswith("files|")
+    finally:
+        df.unpersist()
+
+
+def _copy_dir(files, root):
+    import os
+    import shutil
+
+    os.makedirs(root)
+    for f in files:
+        shutil.copyfile(f, os.path.join(root, os.path.basename(f)))
+    return root
+
+
+def test_file_scan_key_pairs_each_leaf_with_its_files(spark, parquet_in,
+                                                      tmp_path):
+    """The plan text prints a file leaf without its path, so the files are
+    keyed per leaf in plan order: swapping which directory feeds which
+    side of a subtract, or which side a filter sits on, changes the key."""
+    import glob
+    import os
+
+    parts = sorted(glob.glob(os.path.join(parquet_in, "*.parquet")))
+    a = _copy_dir(parts[:1], str(tmp_path / "a"))
+    b = _copy_dir(parts[1:], str(tmp_path / "b"))
+
+    def read(p):
+        return spark.read.parquet(p)
+
+    pairs = [
+        (read(a).subtract(read(b)), read(b).subtract(read(a))),
+        (read(a).where("turn_idx > 2").unionByName(read(b)),
+         read(b).where("turn_idx > 2").unionByName(read(a))),
+    ]
+    for x, y in pairs:
+        kx, ky = input_fingerprint(x), input_fingerprint(y)
+        assert kx.startswith("files|") and ky.startswith("files|")
+        assert kx != ky
+
+
+def test_file_scan_key_covers_reader_options(spark, tmp_path):
+    """One CSV file read with two separators under one explicit schema:
+    same plan text, different rows, different keys."""
+    path = tmp_path / "t.csv"
+    path.write_text("1,2;3\n4,5;6\n")
+    keys = [input_fingerprint(spark.read.schema("a string, b string")
+                              .option("sep", sep).csv(str(path)))
+            for sep in (";", ",")]
+    assert all(k.startswith("files|") for k in keys)
+    assert keys[0] != keys[1]
+
+
+def test_file_scan_key_follows_content_not_location(spark, parquet_in,
+                                                    tmp_path):
+    """The same bytes staged in two directories (new paths, new mtimes)
+    key the same; the same bytes under two partition values do not,
+    whether the read names the table root or the partition directory
+    under a ``basePath``."""
+    import glob
+    import os
+
+    parts = sorted(glob.glob(os.path.join(parquet_in, "*.parquet")))
+    copy = _copy_dir(parts, str(tmp_path / "copy"))
+    assert (input_fingerprint(spark.read.parquet(copy))
+            == input_fingerprint(spark.read.parquet(parquet_in)))
+    keys = []
+    for d in ("1", "2"):
+        root = str(tmp_path / f"part{d}")
+        _copy_dir(parts[:1], os.path.join(root, f"d={d}"))
+        keys.append(input_fingerprint(spark.read.parquet(root)))
+        keys.append(input_fingerprint(spark.read.option("basePath", root)
+                                      .parquet(os.path.join(root, f"d={d}"))))
+    assert all(k.startswith("files|") for k in keys)
+    assert keys[0] != keys[2] and keys[1] != keys[3]
+
+
+def test_rerun_in_a_fresh_process_resumes_every_stage(spark, parquet_in,
+                                                      tmp_path):
+    """run_pipeline over parquet, rerun in another process (its own JVM,
+    so other expression ids and semantic hashes): no stage rebuilds, and
+    the rerun starts no Spark job at all."""
+    import glob
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from text2nkg_spark.plans.pipeline import run_pipeline
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, spark.read.parquet(parquet_in), out,
+                 PipelineConfig())
+
+    def walls():
+        return {p: json.load(open(p))["wall_s"]
+                for p in glob.glob(os.path.join(out, "*.manifest.json"))}
+
+    before = walls()
+    assert len(before) == 11
+    script = (
+        "import sys\n"
+        "from text2nkg_spark.config import PipelineConfig\n"
+        "from text2nkg_spark.plans.pipeline import run_pipeline\n"
+        "from text2nkg_spark.session import get_spark\n"
+        "spark = get_spark('rerun', master='local[2]')\n"
+        "sc = spark.sparkContext\n"
+        "tr = spark.read.parquet(sys.argv[1])\n"
+        "sc.setJobGroup('rerun', 'rerun')\n"
+        "run_pipeline(spark, tr, sys.argv[2], PipelineConfig())\n"
+        "sc._jsc.sc().listenerBus().waitUntilEmpty()\n"
+        "print(len(sc.statusTracker().getJobIdsForGroup('rerun')))\n"
+        "spark.stop()\n")
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    rerun = subprocess.run(
+        [sys.executable, "-c", script, parquet_in, out], env=env,
+        check=True, timeout=600, capture_output=True, text=True)
+    assert walls() == before
+    assert rerun.stdout.split()[-1] == "0"

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from text2nkg_spark.session import local_frame
+
 
 # distinct-surface count at or below which canonicalize_entities runs the
 # whole LSH + union-find driver-side from one collect (surfaces grow far
@@ -252,8 +254,8 @@ def lsh_candidate_pairs(
             rows = _local_lsh_pair_rows(
                 [r[0] for r in head], num_hashes, bands, shingle_n,
                 jaccard_threshold, seed, max_bucket)
-            return surfaces.sparkSession.createDataFrame(
-                rows or [], "a string, b string, jaccard double")
+            return local_frame(surfaces.sparkSession, rows,
+                               "a string, b string, jaccard double")
     rows_per_band = num_hashes // bands
     sh = surfaces.select(
         F.col(surface_col).alias("s"),
@@ -307,8 +309,7 @@ def _local_components(edge_rows: list, spark, node_type: str) -> DataFrame:
     """Driver-side union-find for small edge sets (exact same contract)."""
     roots = _union_find(edge_rows)
     rows = list(roots.items())
-    return spark.createDataFrame(
-        rows or [], f"node {node_type}, component {node_type}")
+    return local_frame(spark, rows, f"node {node_type}, component {node_type}")
 
 
 def connected_components(
@@ -448,8 +449,8 @@ def canonicalize_entities(
             _LSH_SEED, _LSH_MAX_BUCKET)
         roots = _union_find([(a, b) for a, b, _j in pair_rows])
         sc_rows = [(s, roots.get(s, s)) for s in surfaces if s is not None]
-        surf_comp = spark.createDataFrame(
-            sc_rows or [], "surface string, entity_id string")
+        surf_comp = local_frame(
+            spark, sc_rows, "surface string, entity_id string")
         # lazy: one pass over the mention stream when a consumer acts on
         # it (NULL surfaces never join, on either branch)
         m2e = mention_surfaces_df.join(F.broadcast(surf_comp), "surface")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from text2nkg_spark.operators.facts import json_escape
+from text2nkg_spark.session import local_frame
 
 
 def gold_relation_pairs(gold: DataFrame) -> DataFrame:
@@ -426,4 +427,4 @@ def metrics_table(spark, stage_metrics: dict[str, dict[str, float]]):
         for metric, value in sorted(d.items())
         if isinstance(value, (int, float))
     ]
-    return spark.createDataFrame(rows, METRICS_SCHEMA)
+    return local_frame(spark, rows, METRICS_SCHEMA)

@@ -18,14 +18,21 @@ manifest is complete, has a schema and carries the same input fingerprint,
 the stage is skipped and its parquet is reused — exact resume after a crash,
 kill -9 included, because the manifest is deleted before the stage directory
 is overwritten and committed (atomically) only after the data commit.
+
+The fingerprint of a pure file scan is keyed on the plan and the file
+listing and runs no Spark job; any other input is keyed on a hash of every
+row (``input_fingerprint``).
 """
 
 from __future__ import annotations
 
+import functools
 import glob
+import hashlib
 import json
 import os
 import time
+import urllib.parse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -152,13 +159,133 @@ def _file_row_counts(out_dir: str) -> list[dict]:
 
 
 def input_fingerprint(df: DataFrame) -> str:
-    """Deterministic fingerprint of an input: schema + row count + the sum
-    of a 64-bit hash of every row (an order-insensitive multiset hash), in
-    one aggregate job.  Used as the resume key for downstream stages, so a
-    change to any row changes it."""
+    """Deterministic fingerprint of an input, the resume key of the stages
+    built from it: a change to any row changes it.
+
+    A pure file scan (``_file_scan_key``) is keyed on its schema, its
+    canonicalized plan and, per file-source leaf, the reader's format,
+    options and schemas and a sha256 of every input file's bytes, with no
+    Spark job: a rewritten file changes its digest, and a filter or
+    projection over the same files changes the plan.  Any other input is
+    keyed on schema + row count + the sum of a 64-bit hash of every row (an
+    order-insensitive multiset hash), in one aggregate job.
+    """
+    key = _file_scan_key(df)
+    if key is not None:
+        return key
     r = df.select(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64(F.to_json(F.struct("*"))).cast("decimal(38,0)"))
         .alias("h"),
     ).first()
     return f"{df.schema.simpleString()}|{r.n}|{r.h}"
+
+
+@functools.lru_cache(maxsize=None)
+def _unkeyable_patterns(jvm) -> tuple:
+    """Tree patterns of the expressions whose rows the plan text does not
+    pin: Python and JVM UDFs (a body can change under one name) and
+    aggregates (a JVM aggregate UDF has no tree pattern of its own)."""
+    tp = getattr(getattr(
+        jvm.org.apache.spark.sql.catalyst.trees, "TreePattern$"), "MODULE$")
+    return tp.PYTHON_UDF(), tp.SCALA_UDF(), tp.AGGREGATE_EXPRESSION()
+
+
+# reader options that only locate the files; the listing keys those
+_PATH_OPTIONS = {"path", "paths", "basepath"}
+
+
+def _leaf_key(leaf) -> list | None:
+    """What decides one file-source leaf's rows: its format, its reader
+    options (locations aside), its data and partition schemas and, per
+    file, its path under its base (the ``basePath`` option, else the root
+    path it was listed from; partition values live there) and the sha256
+    of its bytes, sorted.  None unless the leaf is a ``HadoopFsRelation``
+    whose files are all local, readable and under a base, and whose
+    output holds no ``_metadata`` column (file paths and times as data)."""
+    if (leaf.getClass().getSimpleName() != "LogicalRelation"
+            or leaf.relation().getClass().getSimpleName()
+            != "HadoopFsRelation"):
+        return None
+    out = leaf.output()
+    if any(out.apply(i).name() == "_metadata" for i in range(out.size())):
+        return None
+    rel = leaf.relation()
+    options = {}
+    it = rel.options().iterator()
+    while it.hasNext():
+        kv = it.next()
+        options[kv._1().lower()] = kv._2()
+    # root paths print as unencoded 'file:/a b', input files as URIs
+    bases = ([options["basepath"]] if "basepath" in options else
+             str(rel.location().rootPaths().mkString("\n")).split("\n"))
+    bases = [urllib.parse.urlparse(b).path.rstrip("/") for b in bases]
+    files = []
+    for f in rel.location().inputFiles():
+        url = urllib.parse.urlparse(f)
+        path = urllib.parse.unquote(url.path)
+        under = [b for b in bases if path == b or path.startswith(b + "/")]
+        if url.scheme != "file" or not under:
+            return None
+        try:
+            with open(path, "rb") as fh:
+                digest = hashlib.file_digest(fh, "sha256").hexdigest()
+        except OSError:
+            return None
+        base = max(under, key=len)
+        files.append(f"{os.path.relpath(path, base)}\t{digest}")
+    return [rel.fileFormat().getClass().getName(),
+            sorted(f"{k}={v}" for k, v in options.items()
+                   if k not in _PATH_OPTIONS),
+            rel.dataSchema().simpleString(),
+            rel.partitionSchema().simpleString(), sorted(files)]
+
+
+def _file_scan_key(df: DataFrame) -> str | None:
+    """sha256 of the schema, the session time zone, the canonicalized
+    analyzed plan and ``_leaf_key`` of every leaf in plan order (subquery
+    plans included) — or None unless the plan is a deterministic tree over
+    file-source relations only, with no UDF and no aggregate.
+
+    Keyed per leaf, in order, so the plan text (which prints a file leaf
+    as ``Relation [none#0,...] parquet``, with no path or option) cannot
+    pair one leaf with another's files: ``read(A).subtract(read(B))`` and
+    ``read(B).subtract(read(A))`` key apart.  The file bytes are read on
+    the driver (I/O, no Spark job); a file's place is keyed only under its
+    base and mtimes not at all, so one input staged in two directories
+    keys the same and a rewrite is seen even when it keeps the file's size
+    and mtime.  Read-side SQL confs
+    other than the time zone are assumed the same across runs.
+
+    Not ``semanticHash()``: it differs between processes for one plan; the
+    canonicalized plan's text does not.  Cached data, local relations, RDDs
+    and DataSourceV2 tables are not file-source leaves, so they fall back
+    to the row hash, as do UDFs and aggregates (``_unkeyable_patterns``).
+    """
+    jvm = df.sparkSession._jvm
+    unkeyable = _unkeyable_patterns(jvm)
+    qe = df._jdf.queryExecution()
+    # the cache-substituted plan: a cached frame serves the rows the cache
+    # holds, not the files' current ones
+    plan = qe.withCachedData()
+    subs = plan.subqueriesAll()
+    leaves = []
+    for p in [plan] + [subs.apply(i) for i in range(subs.size())]:
+        if not p.deterministic() or any(
+                p.containsPattern(u) for u in unkeyable):
+            return None
+        ps = p.collectLeaves()
+        for i in range(ps.size()):
+            key = _leaf_key(ps.apply(i))
+            if key is None:
+                return None
+            leaves.append(key)
+    plan_text = qe.analyzed().canonicalized().treeString(
+        True, False, 2**31 - 1, False, False)
+    h = hashlib.sha256()
+    for part in (df.schema.simpleString(),
+                 df.sparkSession.conf.get("spark.sql.session.timeZone"),
+                 plan_text, json.dumps(leaves)):
+        h.update(part.encode())
+        h.update(b"\n")
+    return f"files|{h.hexdigest()}"

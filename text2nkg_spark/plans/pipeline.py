@@ -126,7 +126,8 @@ def run_pipeline(
     by a conv-hash bucket so downstream per-conversation reads prune.
     """
     from text2nkg_spark.operators.canonicalize import (
-        canonicalize_entities, entity_rollup, rekey_facts_to_entities)
+        _LOCAL_VOCAB_THRESHOLD, canonicalize_entities, entity_rollup,
+        rekey_facts_to_entities)
     from text2nkg_spark.operators.mentions import sentence_surfaces
     from text2nkg_spark.plans.manifest import StageManifest, input_fingerprint
 
@@ -181,9 +182,13 @@ def run_pipeline(
 
     entities = man.run_stage(spark, "entities", fp, build_entities)
 
+    # the map's size is in its manifest: no probe job decides the join
     facts_canonical = man.run_stage(
         spark, "facts_canonical", fp2,
-        lambda: rekey_facts_to_entities(main, s2e.select("surface", "entity_id")))
+        lambda: rekey_facts_to_entities(
+            main, s2e.select("surface", "entity_id"),
+            broadcast_map=man.read_meta("surface_to_entity")["rows_out"]
+            <= _LOCAL_VOCAB_THRESHOLD))
 
     # M5 — per-mention NER labels (run_re.py:1246-1250): predicted-NER mode
     # scores every detected mention through the model head; input-NER mode

@@ -25,7 +25,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def _under_spark_submit() -> bool:
@@ -87,3 +90,15 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-side rows as a ``LocalRelation`` with the DDL's schema.
+
+    Built from an Arrow table: ``createDataFrame(list, ddl)`` makes a
+    ``LogicalRDD`` whose every read runs Python-worker tasks, and an empty
+    pandas frame does too."""
+    schema = DataType.fromDDL(ddl)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
