@@ -58,6 +58,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from text2nkg_spark.config import DataGenConfig, PipelineConfig
+    from text2nkg_spark.plans.manifest import StageManifest
     from text2nkg_spark.plans.pipeline import run_pipeline
     from text2nkg_spark.session import get_spark
 
@@ -83,7 +84,10 @@ def main() -> None:
                        model_checkpoint=args.model_checkpoint,
                        model_variant=args.model_variant,
                        use_ner_results=args.use_ner_results))
-    stats = {name: df.count() for name, df in out.items()}
+    # each stage's row count is in its manifest (footer row counts): no
+    # scan job per stage
+    man = StageManifest(args.output)
+    stats = {name: man.read_meta(name)["rows_out"] for name in out}
     stats["wall_s"] = round(time.time() - t0, 2)
     # deploy-shape witness: under spark-submit this must be the launcher's
     # --master, not a factory-forced local[N]

@@ -181,7 +181,7 @@ def test_rekey_facts_to_entities(spark):
     s2e = spark.createDataFrame(
         [("ent1a ent1b", "canon1"), ("ent2a", "canon2")],
         "surface string, entity_id string")
-    out = rekey_facts_to_entities(facts, s2e).collect()[0]
+    out = rekey_facts_to_entities(facts, s2e, broadcast_map=True).collect()[0]
     assert out.subj_entity_id == "canon1"
     assert out.obj_entity_id == "canon2"
     # unmapped surface falls back to itself — total and collision-free
@@ -230,10 +230,10 @@ def test_rekey_broadcast_is_conditional(spark):
     rows_b = {tuple(r) for r in keyed_b.collect()}
     assert rows == rows_b
 
-    # default (None): bounded size probe — tiny map broadcasts
-    keyed_p = rekey_facts_to_entities(
-        facts, small["surface_to_entity"].select("surface", "entity_id"))
-    assert "ResolvedHint" in keyed_p._jdf.queryExecution().analyzed().toString()
+    # the caller decides: there is no default (and no size-probe job)
+    with pytest.raises(TypeError):
+        rekey_facts_to_entities(
+            facts, small["surface_to_entity"].select("surface", "entity_id"))
 
 
 def test_run_pipeline_decides_the_rekey_join_from_the_manifest(

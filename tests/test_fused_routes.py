@@ -24,7 +24,7 @@ from text2nkg_spark.candidates import enumerate_triples
 from text2nkg_spark.config import DataGenConfig, PipelineConfig
 from text2nkg_spark.datagen import gen_gold_pdf, gen_transcripts_pdf, gen_turn
 from text2nkg_spark.operators.extraction import (
-    extract_facts_fused, score_candidates, stable_doc_id)
+    extract_facts_fused, stable_doc_id)
 from text2nkg_spark.plans.pipeline import (
     build_label_space_from_gold, prepare_sentences, run_pipeline)
 from text2nkg_spark.scoring_core import (
@@ -113,8 +113,6 @@ def test_gold_scorer_without_gold_fails_at_plan_time(spark, data):
     cfg = PipelineConfig(scorer="gold")
     with pytest.raises(ValueError, match="gold_relations"):
         extract_facts_fused(sents, cfg, space)
-    with pytest.raises(ValueError, match="gold_relations"):
-        score_candidates(sents, cfg, space)
 
 
 def test_extraction_job_refuses_gold_scorer(tmp_path):

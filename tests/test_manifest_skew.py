@@ -1,15 +1,11 @@
-"""Checkpoint manifests (exact resume) + skew-splitting equivalence."""
+"""Checkpoint manifests: exact resume, input keys and stage lineage."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from text2nkg_spark.config import DataGenConfig, PipelineConfig
 from text2nkg_spark.datagen import gen_transcripts_pdf
-from text2nkg_spark.operators.extraction import (
-    decode_scores, extract_facts_fused, score_candidates,
-    split_dense_sentences)
 from text2nkg_spark.plans.manifest import StageManifest, input_fingerprint
-from text2nkg_spark.plans.pipeline import default_label_space, prepare_sentences
 
 GEN = DataGenConfig(n_convs=25, turns_per_conv=6, seed=21,
                     mention_density_skew=0.3)  # plenty of dense turns
@@ -127,31 +123,6 @@ def test_run_stage_job_counts(spark, tr, tmp_path_factory):
         spark, "narrow", fp, build)) == 0
 
 
-def test_split_dense_two_stage_equals_fused(spark, tr):
-    """Skew-split two-stage extraction == fused extraction, exactly."""
-    cfg = PipelineConfig(scorer="hash")
-    space = default_label_space()
-    sents = prepare_sentences(tr)
-
-    fused = extract_facts_fused(sents, cfg, space).select(
-        "conv_id", "turn_idx", "pred_idx", "m1s", "m1e", "m2s", "m2e",
-        "rel", "m3s", "m3e", "qual")
-
-    split = split_dense_sentences(sents, max_cost=200)
-    # dense turns (12 mentions -> E^3 = 1728) must actually split
-    n_rows = split.count()
-    n_sents = sents.where(F.size("m_starts") > 0).count()
-    assert n_rows > n_sents
-
-    cand = score_candidates(split, cfg, space)
-    two = decode_scores(cand, cfg, space).select(
-        "conv_id", "turn_idx", "pred_idx", "m1s", "m1e", "m2s", "m2e",
-        "rel", "m3s", "m3e", "qual")
-
-    assert fused.exceptAll(two).count() == 0
-    assert two.exceptAll(fused).count() == 0
-
-
 def test_run_pipeline_end_to_end_and_resume(spark, tr, tmp_path_factory):
     from text2nkg_spark.plans.pipeline import run_pipeline
 
@@ -198,6 +169,27 @@ def test_metrics_sink_table(spark, tr, tmp_path_factory):
     assert got[("entities", "rows_out")] == out["entities"].count()
     assert got[("predictions", "n_partitions")] >= 1
     assert all(got[(s, "wall_s")] >= 0 for s in ("sentences", "facts"))
+
+
+def test_metrics_lists_only_the_stages_of_its_run(spark, tmp_path):
+    """A use_ner_results rerun into the out_root of a default run has no
+    mention_ner stage, so its metrics table lists none: the earlier run's
+    mention_ner manifest is still on disk, but this run did not build it."""
+    import os
+
+    from text2nkg_spark.plans.pipeline import run_pipeline
+
+    tr = spark.createDataFrame(gen_transcripts_pdf(
+        DataGenConfig(n_convs=4, turns_per_conv=4, seed=5)))
+    root = str(tmp_path / "out")
+    run_pipeline(spark, tr, root, PipelineConfig(scorer="hash"))
+    out = run_pipeline(spark, tr, root,
+                       PipelineConfig(scorer="hash", use_ner_results=True))
+    assert "mention_ner" not in out
+    assert StageManifest(root).read_meta("mention_ner") is not None
+    m = spark.read.parquet(os.path.join(root, "metrics"))
+    assert {r.stage for r in m.select("stage").distinct().collect()} == (
+        set(out) - {"metrics"})
 
 
 def test_resume_key_covers_semantic_config(spark, tr, tmp_path_factory):

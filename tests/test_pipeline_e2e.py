@@ -6,7 +6,6 @@ detection -> gold-backed scoring -> decode -> facts/compaction, asserting
 * exact equality with the driver-side oracle (reference-decode transcription
   fed identical logits), and
 * P/R >= 0.95 vs the planted gold annotations (BASELINE target),
-* fused path == two-stage path,
 * compacted canonical JSON == oracle compaction output.
 """
 
@@ -20,8 +19,7 @@ from text2nkg_spark.config import DataGenConfig, PipelineConfig
 from text2nkg_spark.datagen import gen_gold_pdf, gen_transcripts_pdf, gen_turn
 from text2nkg_spark.operators.assembly import (
     assemble_documents, turn_equality_violations)
-from text2nkg_spark.operators.extraction import (
-    decode_scores, score_candidates, stable_doc_id)
+from text2nkg_spark.operators.extraction import stable_doc_id
 from text2nkg_spark.operators.facts import compacted_facts, fact_table
 from text2nkg_spark.operators.mentions import (
     detect_mentions, detect_mentions_exploded, mention_surfaces)
@@ -136,20 +134,6 @@ def test_parity_vs_gold_above_095(spark, data, extraction):
     m = relation_qualifier_prf(preds, gold)
     assert m["p"] >= 0.95 and m["r"] >= 0.95, m
     assert m["q_p"] >= 0.95 and m["q_r"] >= 0.95, m
-
-
-def test_two_stage_equals_fused(spark, data, extraction):
-    cfg, space, preds = extraction
-    tr, gold = data
-    sents = prepare_sentences(tr, gold)
-    cand = score_candidates(sents, cfg, space)
-    two = decode_scores(cand, cfg, space)
-    a = preds.select("conv_id", "turn_idx", "pred_idx", "m1s", "m1e", "m2s",
-                     "m2e", "rel", "m3s", "m3e", "qual")
-    b = two.select("conv_id", "turn_idx", "pred_idx", "m1s", "m1e", "m2s",
-                   "m2e", "rel", "m3s", "m3e", "qual")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
 
 
 def test_compaction_matches_oracle(spark, data, extraction):

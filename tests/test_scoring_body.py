@@ -1,11 +1,11 @@
-"""The shared scoring body of the extraction UDFs, and what it refuses.
+"""The shared scoring body of extraction, and what it refuses.
 
 * ``_lookup_gold_labels`` is the one gold-label lookup: at any width it
   equals ``dict.get(key, (0,) * width)`` row by row, and the multi-schema
   ``score_heads`` gold branch built on it equals a per-candidate dict loop.
 * The ``predictions`` resume key holds the label NAMES: a rerun on a label
   space of the same size but other names rebuilds.
-* The hyperrelation paths (both UDFs, ``extract``, the stream) refuse any
+* The hyperrelation paths (the UDF, ``extract``, the stream) refuse any
   other ``nary_schema`` at plan time.
 """
 
@@ -16,8 +16,7 @@ from text2nkg_spark.candidates import enumerate_triples
 from text2nkg_spark.config import DataGenConfig, PipelineConfig
 from text2nkg_spark.datagen import gen_transcripts_pdf
 from text2nkg_spark.labels import LabelSpace
-from text2nkg_spark.operators.extraction import (
-    extract_facts_fused, score_candidates)
+from text2nkg_spark.operators.extraction import extract_facts_fused
 from text2nkg_spark.operators.extraction_multi import (
     SchemaLabels, head_width, score_heads)
 from text2nkg_spark.plans.pipeline import (
@@ -123,7 +122,6 @@ def test_non_hyperrelation_schema_refused(spark, tmp_path, schema):
     space = LabelSpace.build(["[r]a"], ["[k]b"])
     for build in (
             lambda: extract_facts_fused(sents, cfg, space),
-            lambda: score_candidates(sents, cfg, space),
             lambda: extract(tr, cfg, space),
             lambda: stream_extract_facts(
                 stream_transcripts(spark, str(tmp_path)), cfg, space)):

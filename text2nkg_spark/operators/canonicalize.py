@@ -491,7 +491,7 @@ def canonicalize_entities(
 def rekey_facts_to_entities(
     facts: DataFrame,
     surface_to_entity: DataFrame,
-    broadcast_map: bool | None = None,
+    broadcast_map: bool,
 ) -> DataFrame:
     """G4 final step (north_star): main-triple facts re-keyed to canonical
     entity ids — subj/obj/value surfaces joined to their components.
@@ -511,16 +511,7 @@ def rekey_facts_to_entities(
       large at scale; join normally (shuffle, or whatever AQE picks from
       runtime sizes).  An unconditional broadcast here would OOM the
       driver at billions of distinct surfaces.
-    * ``None`` (default) — probe with a bounded
-      ``limit(_LOCAL_VOCAB_THRESHOLD + 1).count()`` (early-terminating,
-      EAGER: runs a small Spark job at call time) and broadcast only if
-      the map fits under the same threshold the small-vocab branch uses.
     """
-    if broadcast_map is None:
-        broadcast_map = (
-            surface_to_entity.select("surface")
-            .limit(_LOCAL_VOCAB_THRESHOLD + 1).count()
-            <= _LOCAL_VOCAB_THRESHOLD)
 
     def attach(df: DataFrame, col: str) -> DataFrame:
         m = surface_to_entity.select(

@@ -1,34 +1,24 @@
-"""Candidate scoring + decode — the two Arrow UDF families (SURVEY.md §2.9).
+"""Hyperrelation extraction — one Arrow UDF, scan → facts (SURVEY.md §2.9).
 
-Both take the flat sentence contract ``plans.pipeline.prepare_sentences``
-emits (conv_id, turn_idx, text, m_starts, m_ends [, gold_relations]) and
-share one body per Arrow batch, differing only in what they do with its
-logits:
+``extract_facts_fused`` takes the flat sentence contract
+``plans.pipeline.prepare_sentences`` emits (conv_id, turn_idx, text,
+m_starts, m_ends [, gold_relations]) and runs three phases per Arrow batch,
+the reference's score-then-decode ``evaluate()`` loop (run_re.py:1259-1277):
 
 * phase 1, ``_sentence_batch`` — enumerate every sentence's span triples
-  (C3), subject-range filtered when ``split_dense_sentences`` added
-  ``sub_lo``/``sub_hi``;
+  (C3);
 * phase 2, ``_batch_logits`` — score every candidate of the batch (M1-M5
   stand-in) into one float32 logit buffer per head: hash in cache-sized
-  vectorized slices, gold/model per sentence (``_sentence_logits``).
+  vectorized slices, gold/model per sentence (``_sentence_logits``);
+* phase 3 — decode the batch in one ``decode_sentences_batch`` call
+  (6-permutation ensemble + direction normalize + NMS, D2-D5) and project
+  fact texts (G1).
 
-Fused path (default for every scorer)
-    ``extract_facts_fused`` decodes the batch in one
-    ``decode_sentences_batch`` call (6-permutation ensemble + direction
-    normalize + NMS, D2-D5) and projects fact texts (G1).  Logits never
-    become Spark rows, so extraction is SHUFFLE-FREE end to end — scan →
-    mapInPandas → facts.  This is the 100 TB plan: throughput scales
-    linearly with input splits and there is no wide dependency to skew.
+Logits never become Spark rows, so extraction is SHUFFLE-FREE end to end —
+scan → one Arrow UDF → facts: throughput scales linearly with input splits
+and there is no wide dependency to skew.
 
-Two-stage path (for expensive model scorers + skew salting)
-    ``score_candidates`` emits one row per span triple with logit arrays —
-    per-(sentence, subject) work units that can be salted/split across
-    executors when a mention-dense sentence would hot-spot a task
-    (SURVEY.md §4 item 1).  ``decode_scores`` then groups by sentence
-    (``applyInPandas``) and runs the identical decode core.  Tests assert the
-    two paths emit byte-identical facts.
-
-Both refuse a non-hyperrelation ``nary_schema`` at plan time
+It refuses a non-hyperrelation ``nary_schema`` at plan time
 (``extraction_multi.extract_facts_multi`` serves the others).  Scorers are
 deterministic numpy (scoring_core.py) or the packed-marker ``ModelScorer``,
 loaded once per python worker (``_worker_model_scorer``).
@@ -43,8 +33,7 @@ import pandas as pd
 
 from text2nkg_spark.candidates import enumerate_triples
 from text2nkg_spark.config import PipelineConfig
-from text2nkg_spark.decode_core import (
-    decode_sentence, decode_sentences_batch)
+from text2nkg_spark.decode_core import decode_sentences_batch
 from text2nkg_spark.labels import LabelSpace
 from text2nkg_spark.scoring_core import (
     gold_logits, gold_orderings, hash_logits_batch, log_softmax)
@@ -54,12 +43,6 @@ FACT_SCHEMA = (
     "m1s int, m1e int, m2s int, m2e int, rel string, "
     "m3s int, m3e int, qual string, rel_score double, q_score double, "
     "subj string, obj string, value string"
-)
-
-SCORE_SCHEMA = (
-    "conv_id string, turn_idx int, cand_idx long, i int, j int, k int, "
-    "m1s int, m1e int, m2s int, m2e int, m3s int, m3e int, "
-    "n_entities int, rel_logits array<double>, q_logits array<double>"
 )
 
 
@@ -103,7 +86,7 @@ def _enumerate(cfg: PipelineConfig, ents: np.ndarray, text: str, tokenizer):
 
 def _worker_model_scorer(cfg: PipelineConfig, num_classes: int):
     """The worker's ModelScorer for this config: every model-scored UDF
-    (both extraction UDFs, ``predicted_ner_table``, the multi-schema
+    (``extract_facts_fused``, ``predicted_ner_table``, the multi-schema
     ``score_heads``) loads its weights through here.  ``num_classes`` is
     ``score_sentence``'s output width; the multi-schema heads pass their
     widths explicitly, so any cached width serves them."""
@@ -179,7 +162,7 @@ def _entity_spans(starts, ends) -> np.ndarray:
 
 def _check_input(columns: list[str], cfg: PipelineConfig) -> bool:
     """Plan-time check of an input's ``columns`` and the config, shared by
-    both UDFs and ``run_pipeline``, so a bad input or config fails on the
+    the UDF and ``run_pipeline``, so a bad input or config fails on the
     driver before any work, not inside an executor.  Returns whether the
     gold scorer reads ``gold_relations``."""
     if cfg.nary_schema != "hyperrelation":
@@ -197,21 +180,15 @@ def _check_input(columns: list[str], cfg: PipelineConfig) -> bool:
 
 
 def _sentence_batch(pdf: pd.DataFrame, cfg: PipelineConfig, tokenizer):
-    """Phase 1 of both UDFs: enumerate every sentence of an Arrow batch.
+    """Phase 1: enumerate every sentence of an Arrow batch.
 
     Returns ``([(row, doc_id, ents, cand, lo, hi)], n)``: the sentences
     with at least one candidate, each with its rows ``lo:hi`` of the
-    batch's logit buffers, and the candidate total ``n``.  Optional
-    ``sub_lo``/``sub_hi`` columns (``split_dense_sentences``) restrict a
-    row to a subject range."""
+    batch's logit buffers, and the candidate total ``n``."""
     conv_ids = pdf["conv_id"].to_numpy()
     text_col = pdf["text"].to_numpy()
     starts_col = pdf["m_starts"].to_numpy()
     ends_col = pdf["m_ends"].to_numpy()
-    ranged = "sub_lo" in pdf.columns
-    if ranged:
-        sub_lo = pdf["sub_lo"].to_numpy()
-        sub_hi = pdf["sub_hi"].to_numpy()
     sent: list[tuple] = []
     pos = 0
     for r in range(len(pdf)):
@@ -219,8 +196,6 @@ def _sentence_batch(pdf: pd.DataFrame, cfg: PipelineConfig, tokenizer):
         if ents.shape[0] == 0:
             continue
         cand = _enumerate(cfg, ents, text_col[r], tokenizer)
-        if ranged:
-            cand = cand[(cand[:, 1] >= sub_lo[r]) & (cand[:, 1] < sub_hi[r])]
         if cand.shape[0] == 0:
             continue
         sent.append((r, stable_doc_id(conv_ids[r]), ents, cand,
@@ -231,7 +206,7 @@ def _sentence_batch(pdf: pd.DataFrame, cfg: PipelineConfig, tokenizer):
 
 def _batch_logits(pdf: pd.DataFrame, sent: list, n: int,
                   cfg: PipelineConfig, space: LabelSpace, use_gold: bool):
-    """Phase 2 of both UDFs: score the batch's ``n`` candidates into one
+    """Phase 2: score the batch's ``n`` candidates into one
     float32 (n, C) buffer per head, sentence ``lo:hi`` in its rows."""
     c = space.num_classes
     turn_idxs = pdf["turn_idx"].to_numpy()
@@ -318,115 +293,3 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
 _FACT_COLS = [
     "conv_id", "turn_idx", "pred_idx", "m1s", "m1e", "m2s", "m2e", "rel",
     "m3s", "m3e", "qual", "rel_score", "q_score", "subj", "obj", "value"]
-
-_SCORE_COLS = [
-    "conv_id", "turn_idx", "cand_idx", "i", "j", "k", "m1s", "m1e", "m2s",
-    "m2e", "m3s", "m3e", "n_entities", "rel_logits", "q_logits"]
-
-
-def split_dense_sentences(sents, max_cost: int = 1000):
-    """Skew mitigation for the two-stage path (SURVEY.md §4 item 1).
-
-    Candidate enumeration is O(E^3) per sentence; a mention-dense turn
-    hot-spots whichever task holds it, and AQE cannot split inside a UDF
-    group.  This pre-pass splits each sentence whose E^3 exceeds
-    ``max_cost`` into several (sub_lo, sub_hi) subject-range rows BEFORE
-    scoring, so the expensive model scoring spreads across executors; the
-    per-sentence decode regroups the pieces (its input is the union of all
-    subject ranges, which is exactly the full candidate grid).
-    """
-    from pyspark.sql import functions as F
-
-    e = F.size("m_starts")
-    cost = e * e * e
-    n_chunks = F.when(cost > max_cost, F.least(
-        F.ceil(cost / max_cost).cast("int"), e)).otherwise(F.lit(1))
-    chunk_sz = F.ceil(e / n_chunks).cast("int")
-    return (
-        sents.withColumn("_nc", n_chunks)
-        .withColumn("_cs", chunk_sz)
-        .withColumn("_c", F.explode(F.sequence(F.lit(0), F.col("_nc") - 1)))
-        .withColumn("sub_lo", (F.col("_c") * F.col("_cs")).cast("int"))
-        .withColumn(
-            "sub_hi",
-            F.least((F.col("_c") + 1) * F.col("_cs"), e).cast("int"))
-        .where(F.col("sub_lo") < F.col("sub_hi"))
-        .drop("_nc", "_cs", "_c")
-    )
-
-
-def score_candidates(df, cfg: PipelineConfig, space: LabelSpace):
-    """Two-stage scoring: one output row per candidate triple with logits.
-
-    Input as extract_facts_fused; optional sub_lo/sub_hi columns (from
-    ``split_dense_sentences``) restrict each row to a subject range.  At
-    scale, follow with ``.repartition(N, 'conv_id', 'turn_idx', 'sub_lo')``
-    before an expensive model scorer.
-    """
-    use_gold = _check_input(df.columns, cfg)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tokenizer = _make_tokenizer(cfg)
-        for pdf in batches:
-            sent, n = _sentence_batch(pdf, cfg, tokenizer)
-            if not sent:
-                yield pd.DataFrame(columns=_SCORE_COLS)
-                continue
-            rel_all, q_all = _batch_logits(pdf, sent, n, cfg, space, use_gold)
-            rows = [s_[0] for s_ in sent]
-            counts = [s_[5] - s_[4] for s_ in sent]
-            f = pd.DataFrame(np.concatenate([s_[3] for s_ in sent]),
-                             columns=_SCORE_COLS[2:12])
-            f.insert(0, "conv_id",
-                     np.repeat(pdf["conv_id"].to_numpy()[rows], counts))
-            f.insert(1, "turn_idx",
-                     np.repeat(pdf["turn_idx"].to_numpy()[rows], counts))
-            f["n_entities"] = np.repeat([s_[2].shape[0] for s_ in sent], counts)
-            f["rel_logits"] = list(rel_all)
-            f["q_logits"] = list(q_all)
-            yield f
-
-    return df.mapInPandas(run, schema=SCORE_SCHEMA)
-
-
-def decode_scores(cand_df, cfg: PipelineConfig, space: LabelSpace):
-    """Two-stage decode: group candidate rows per sentence, run the decode
-    core, emit span-level predictions (texts joined back separately).
-    """
-
-    schema = (
-        "conv_id string, turn_idx int, pred_idx int, "
-        "m1s int, m1e int, m2s int, m2e int, rel string, "
-        "m3s int, m3e int, qual string, rel_score double, q_score double"
-    )
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id, turn_idx = key[0], int(key[1])
-        pdf = pdf.sort_values("cand_idx", kind="stable")
-        cand = pdf[["cand_idx", "i", "j", "k", "m1s", "m1e", "m2s", "m2e",
-                    "m3s", "m3e"]].to_numpy(dtype=np.int64)
-        rel_lg = np.stack(pdf["rel_logits"].to_numpy())
-        q_lg = np.stack(pdf["q_logits"].to_numpy())
-        e = int(pdf["n_entities"].iat[0])
-        # reconstruct entity spans from candidate rows (subject slots)
-        ents = np.zeros((e, 2), dtype=np.int64)
-        ents[cand[:, 1], 0] = cand[:, 4]
-        ents[cand[:, 1], 1] = cand[:, 5]
-        ents[cand[:, 2], 0] = cand[:, 6]
-        ents[cand[:, 2], 1] = cand[:, 7]
-        preds = decode_sentence(
-            ents, cand, rel_lg, q_lg, space, cfg.same_entity,
-            strict=(cfg.tokenizer == "identity"),
-            unidirect=cfg.eval_unidirect)
-        rows = [
-            (conv_id, turn_idx, pi, *p[:8], p[8], p[9])
-            for pi, p in enumerate(preds)
-        ]
-        return pd.DataFrame(
-            rows,
-            columns=["conv_id", "turn_idx", "pred_idx", "m1s", "m1e", "m2s",
-                     "m2e", "rel", "m3s", "m3e", "qual", "rel_score",
-                     "q_score"],
-        )
-
-    return cand_df.groupBy("conv_id", "turn_idx").applyInPandas(run, schema)

@@ -27,9 +27,8 @@ if torch/transformers are genuinely absent at WEIGHT-LOAD time.
 Spark integration (see operators/extraction.py): one ``ModelScorer`` per
 python worker, created lazily inside the mapInPandas iterator — executor-
 local model load; weights distributed via ``spark-submit --files`` or a
-shared filesystem, NOT broadcast (400 MB through the driver).  The
-two-stage pipeline (score_candidates -> decode_scores) with
-``split_dense_sentences`` spreads per-subject batches across executors and
+shared filesystem, NOT broadcast (400 MB through the driver).
+``extract_facts_fused`` scores and decodes each Arrow batch in one task;
 fp16 autocast applies on GPU executors (reference: apex O1,
 run_re.py:925-930).
 """

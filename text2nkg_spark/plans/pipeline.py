@@ -190,12 +190,18 @@ def run_pipeline(
             broadcast_map=man.read_meta("surface_to_entity")["rows_out"]
             <= _LOCAL_VOCAB_THRESHOLD))
 
+    out = {
+        "sentences": sents, "predictions": preds, "facts": facts,
+        "main_triples": main, "fact_qualifiers": quals,
+        "compacted": comp, "surface_to_entity": s2e,
+        "entities": entities, "facts_canonical": facts_canonical,
+    }
+
     # M5 — per-mention NER labels (run_re.py:1246-1250): predicted-NER mode
     # scores every detected mention through the model head; input-NER mode
     # needs annotations the transcript shape doesn't carry, so the stage
     # runs only in predicted mode.  Cannot affect the fact tables above
     # (pos2ner rebuild, operators/ner.py) — a separate, resumable stage.
-    mention_ner = None
     if not cfg.use_ner_results:
         def build_ner():
             from text2nkg_spark.operators.ner import predicted_ner_table
@@ -203,27 +209,27 @@ def run_pipeline(
             return predicted_ner_table(
                 sents, cfg, ["NIL", "Entity"], space=space)
 
-        mention_ner = man.run_stage(spark, "mention_ner", fp2, build_ner)
+        out["mention_ner"] = man.run_stage(
+            spark, "mention_ner", fp2, build_ner)
 
     # S6 — metrics sink: per-stage row counts / wall / partitions from the
-    # lineage manifests, plus eval P/R/F1 when gold is supplied; written as
-    # a queryable long-format parquet table beside the data.  It is itself
-    # a manifest stage, so a fully-resumed rerun skips the (expensive)
-    # eval joins instead of recomputing them.
+    # lineage manifests of the stages this call ran (a manifest an earlier
+    # run left under another config is not one of them), plus eval P/R/F1
+    # when gold is supplied; written as a queryable long-format parquet
+    # table beside the data.  It is itself a manifest stage, so a
+    # fully-resumed rerun skips the (expensive) eval joins instead of
+    # recomputing them.
     def build_metrics():
         from text2nkg_spark.operators.metrics import metrics_table
 
         stage_metrics: dict[str, dict[str, float]] = {}
-        for st in ("sentences", "predictions", "facts", "main_triples",
-                   "fact_qualifiers", "compacted", "surface_to_entity",
-                   "entities", "facts_canonical", "mention_ner"):
+        for st in out:
             meta = man.read_meta(st)
-            if meta:
-                stage_metrics[st] = {
-                    "rows_out": meta["rows_out"],
-                    "wall_s": meta["wall_s"],
-                    "n_partitions": len(meta["partitions"]),
-                }
+            stage_metrics[st] = {
+                "rows_out": meta["rows_out"],
+                "wall_s": meta["wall_s"],
+                "n_partitions": len(meta["partitions"]),
+            }
         if gold is not None:
             from text2nkg_spark.operators.metrics import (
                 relation_qualifier_prf)
@@ -231,15 +237,6 @@ def run_pipeline(
             stage_metrics["eval"] = relation_qualifier_prf(preds, gold)
         return metrics_table(spark, stage_metrics)
 
-    mdf = man.run_stage(spark, "metrics", fp2 + fp_gold, build_metrics)
-
-    out = {
-        "sentences": sents, "predictions": preds, "facts": facts,
-        "main_triples": main, "fact_qualifiers": quals,
-        "compacted": comp, "entities": entities,
-        "surface_to_entity": s2e, "facts_canonical": facts_canonical,
-        "metrics": mdf,
-    }
-    if mention_ner is not None:
-        out["mention_ner"] = mention_ner
+    out["metrics"] = man.run_stage(
+        spark, "metrics", fp2 + fp_gold, build_metrics)
     return out
