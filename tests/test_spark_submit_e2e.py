@@ -1,7 +1,7 @@
-"""spark-submit --py-files end-to-end deploy-shape tests.
+"""spark-submit --py-files end-to-end deploy-shape test.
 
 The north rule's launch mode is ``spark-submit --py-files text2nkg_spark.zip
-jobs/...`` on a multi-executor cluster.  These tests exercise exactly that
+jobs/...`` on a multi-executor cluster.  This test exercises exactly that
 shape as a real subprocess:
 
 * the package ships ONLY as the ``--py-files`` zip — the job script is
@@ -14,8 +14,8 @@ shape as a real subprocess:
 * outputs are verified on disk (partitioned parquet + manifests), not just
   via exit code.
 
-Each test pays one cold JVM (~30 s); inputs are tiny (sf0.001 / 160
-synthetic turns) so the pipeline work itself is seconds.
+The test pays one cold JVM (~30 s); its input is tiny (160 synthetic
+turns) so the pipeline work itself is seconds.
 """
 
 from __future__ import annotations
@@ -30,8 +30,6 @@ import zipfile
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# same knob the rest of the suite uses for pointing at an sf directory
-SF_DIR = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.001")
 
 
 def _spark_submit() -> str | None:
@@ -134,24 +132,3 @@ def test_spark_submit_extraction_e2e(tmp_path, pkg_zip):
         meta = json.load(f)
     assert meta["complete"] and meta["rows_out"] == stats["facts"]
     assert all("rows" in p for p in meta["partitions"])
-
-
-def test_spark_submit_corpus_prep_e2e(tmp_path, pkg_zip):
-    docs = os.path.join(SF_DIR, "documents.parquet")
-    if not os.path.exists(docs):
-        pytest.skip(f"testdata missing: {docs}")
-    out = tmp_path / "corpus_out"
-    stats = _submit(os.path.join(REPO, "jobs", "run_corpus_prep.py"),
-                    ["--input", docs, "--output", str(out),
-                     "--budget", "512"], tmp_path, pkg_zip)
-    assert stats["master"] == "local[4]"
-    assert 0 < stats["n_gated"] <= stats["n_input"]
-    assert 0 < stats["n_sampled"] <= stats["n_deduped"] <= stats["n_gated"]
-    assert stats["n_shards"] > 0
-    # partitioned corpus write: shard= hive dirs, row count == n_sampled
-    shard_dirs = [d for d in os.listdir(out / "documents")
-                  if d.startswith("shard=")]
-    assert len(shard_dirs) > 0
-    assert _parquet_rows(str(out / "documents")) == stats["n_sampled"]
-    assert _parquet_rows(str(out / "manifest")) == stats["n_shards"]
-    assert _parquet_rows(str(out / "profile")) > 0

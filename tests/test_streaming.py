@@ -12,8 +12,7 @@ from text2nkg_spark.operators.mentions import detect_mentions
 from text2nkg_spark.plans.pipeline import (
     default_label_space, prepare_sentences)
 from text2nkg_spark.streaming.ingest import (
-    run_to_parquet, running_conv_stats, stream_extract_facts,
-    stream_transcripts, windowed_turn_counts)
+    run_to_parquet, stream_extract_facts, stream_transcripts)
 
 GEN = DataGenConfig(n_convs=30, turns_per_conv=6, seed=3)
 
@@ -93,76 +92,3 @@ def test_stream_restart_processes_only_new_files(spark, tr_dir,
     assert want.exceptAll(got).count() == 0
     assert got.count() > n_first
     assert got.where(F.col("conv_id").endswith("_wave2")).count() > 0
-
-
-def test_windowed_counts_match_batch(spark, tr_dir, tmp_path_factory):
-    out = tmp_path_factory.mktemp("win_out")
-    stream = stream_transcripts(spark, tr_dir)
-    q = run_to_parquet(
-        windowed_turn_counts(stream), str(out / "win"), str(out / "ckpt"))
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(out / "win"))
-
-    batch = spark.read.parquet(tr_dir)
-    want = (
-        batch.groupBy(F.window("ts", "10 minutes").alias("w"), "role")
-        .agg(F.count(F.lit(1)).alias("n_turns"),
-             F.sum(F.length("text")).alias("n_chars"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "role", "n_turns", "n_chars")
-    )
-    # append mode emits a window only once the watermark passes it; windows
-    # still open when the availableNow drain finishes are held in state and
-    # never emitted — so: no spurious rows, and anything missing lies inside
-    # the final watermark horizon (max_ts - 30 minutes).
-    assert got.exceptAll(want).count() == 0
-    missing = want.exceptAll(got)
-    max_ts = batch.agg(F.max("ts")).collect()[0][0]
-    late_horizon = F.lit(max_ts) - F.expr("INTERVAL 30 MINUTES")
-    assert missing.where(F.col("window_end") <= late_horizon).count() == 0
-
-
-def test_running_conv_stats_final_state(spark, tr_dir, tmp_path_factory):
-    out = tmp_path_factory.mktemp("state_out")
-    stream = stream_transcripts(spark, tr_dir)
-    q = run_to_parquet(
-        running_conv_stats(stream), str(out / "stats"), str(out / "ckpt"),
-        output_mode="update")
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(out / "stats"))
-    # last update per conv must equal the batch totals
-    final = (
-        got.groupBy("conv_id")
-        .agg(F.max("n_turns").alias("n_turns"), F.max("n_chars").alias("n_chars"))
-    )
-    batch = spark.read.parquet(tr_dir)
-    want = batch.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum(F.length("text")).alias("n_chars"))
-    assert final.exceptAll(want).count() == 0
-    assert want.exceptAll(final).count() == 0
-
-
-def test_stream_dedup_within_watermark(spark, tr_dir, tmp_path_factory):
-    """Duplicated input files collapse to the distinct turn set — with
-    state BOUNDED by the watermark horizon, not a forever-growing store."""
-    from text2nkg_spark.streaming.ingest import dedup_turns_within_watermark
-
-    d = tmp_path_factory.mktemp("stream_dedup")
-    dup_dir = str(d / "in")
-    batch = spark.read.parquet(tr_dir)
-    # write the same turns twice -> every row is a duplicate
-    batch.write.mode("overwrite").parquet(dup_dir)
-    batch.write.mode("append").parquet(dup_dir)
-
-    stream = stream_transcripts(spark, dup_dir)
-    deduped = dedup_turns_within_watermark(stream)
-    out_dir = str(d / "out")
-    q = run_to_parquet(deduped, out_dir, str(d / "ckpt"))
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir)
-    n_distinct = batch.select("conv_id", "turn_idx", "text").distinct().count()
-    assert got.count() == n_distinct
-    assert got.select("conv_id", "turn_idx").distinct().count() == n_distinct

@@ -116,9 +116,9 @@ def enumerate_triples(
     entities: np.ndarray,  # (E, 2) int64 spans, sentence order
     max_seq_length: int,
 ) -> np.ndarray:
-    """Returns (N, 9) int64 rows:
-    [cand_idx, i, j, k, m1s, m1e, m2s, m2e, m3s, ...] — actually
-    [cand_idx, i, j, k] + m1(2) + m2(2) + m3(2) → width 10.
+    """Returns (N, 10) int64 rows
+    [cand_idx, i, j, k, m1s, m1e, m2s, m2e, m3s, m3e]: the candidate index,
+    the subject/object/qualifier entity indices, and their three spans.
 
     Rows appear in exact reference enumeration order with pruned
     subjects/objects/qualifiers removed.

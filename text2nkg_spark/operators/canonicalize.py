@@ -234,7 +234,7 @@ def lsh_candidate_pairs(
 
     Size-adaptive like :func:`connected_components`: at or below
     ``local_threshold`` distinct surfaces the whole LSH runs driver-side
-    (``_local_lsh_pairs`` — bit-identical md5/band/cap/verify semantics),
+    (``_local_lsh_pair_rows`` — bit-identical md5/band/cap/verify semantics),
     because the distributed plan's ~6 fixed-overhead stages dwarf a
     few-thousand-entry vocabulary; above it, the shuffle plan below
     scales to any corpus.  ``local_threshold=0`` forces the distributed
@@ -504,9 +504,9 @@ def rekey_facts_to_entities(
     ``broadcast_map`` decides the join strategy, mirroring
     :func:`canonicalize_entities`'s own branch on its mention join:
 
-    * ``True`` — the map is known driver-small (e.g. it came from the
-      small-vocab branch: thread ``canonicalize_entities(...)["small_vocab"]``
-      here); force ``F.broadcast``.
+    * ``True`` — the map is known driver-small (``run_pipeline`` passes
+      ``True`` when the ``surface_to_entity`` manifest's ``rows_out`` is at
+      most the small-vocab threshold); force ``F.broadcast``.
     * ``False`` — the map is distinct-surface-sized and may be arbitrarily
       large at scale; join normally (shuffle, or whatever AQE picks from
       runtime sizes).  An unconditional broadcast here would OOM the

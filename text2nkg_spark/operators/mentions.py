@@ -2,7 +2,8 @@
 
 A mention is a maximal run of consecutive tokens matching a marker predicate
 (synthetic surfaces are ``ent``-prefixed, datagen.py; a production system
-plugs an NER model into the scoring UDF instead — see operators/scoring.py).
+plugs an NER model into the scoring UDF instead — see
+operators/model_scorer.py).
 
 Two equivalent implementations, both shuffle-free per input row:
 

@@ -60,8 +60,7 @@ def stratified_sample(
     Strata keys must be non-null and mutually comparable (the rate chain
     sorts them); rows whose ``strata_col`` is NULL match no stratum
     (null-unsafe ``==``) and fall to ``default_rate`` — coalesce nulls to
-    a sentinel stratum first if they must survive (jobs/run_corpus_prep.py
-    uses ``'und'``)."""
+    a sentinel stratum first if they must survive."""
     thresh = F.lit(int(default_rate * SAMPLE_BUCKETS))
     for value, rate in sorted(strata_rates.items()):
         thresh = F.when(
