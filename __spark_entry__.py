@@ -7,9 +7,9 @@ triples -> 6-permutation ensemble decode -> facts).
 ``queries()`` — one entry per implemented operator family (SURVEY.md §2 +
 training-data ops); each callable takes (spark, sf_dir) and returns a
 DataFrame.  ``oracle_sql()`` holds DuckDB-equivalent SQL for every
-SQL-expressible query; the model-scored extraction stages, LSH/simhash
-pair generation (xxhash64-based) and multimodal UDF plumbing are rows-only
-checks backed by exact pytest oracles instead (tests/).
+SQL-expressible query; the model-scored extraction stages and LSH/simhash
+pair generation (xxhash64-based) are rows-only checks backed by exact pytest
+oracles instead (tests/).
 
 Float-stability policy for oracle parity: money aggregates run in DECIMAL
 (exact in both engines), ratios divide identical integers, means are
@@ -1951,15 +1951,6 @@ def q_bloom_semijoin(spark, sf_dir):
          - F.count("o_orderkey")).cast("long").alias("n_false_pos"))
 
 
-def q_multimodal_features(spark, sf_dir):
-    """Binary-payload decode + pooled features, projected long-format so
-    every output column is a sortable scalar (driver canonicalization)."""
-    from text2nkg_spark.operators.multimodal import (
-        extract_features, feature_scalars, synth_media_df)
-
-    return feature_scalars(extract_features(synth_media_df(spark, n=64)))
-
-
 def q_events_scd2(spark, sf_dir):
     """Type-2 SCD dimension-history build (temporal.scd2_intervals):
     each user's event_type change stream collapsed into half-open
@@ -2170,7 +2161,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nkg_gold_role_extract": _q_gold_multi("role"),
         "nkg_gold_hypergraph_extract": _q_gold_multi("hypergraph"),
         "nkg_metrics_table": q_nkg_metrics_table,
-        "multimodal_features": q_multimodal_features,
         "nkg_gold_pruned": q_nkg_gold_pruned,
         "nkg_gold_pipeline": q_nkg_gold_pipeline,
         "nkg_gold_comp_match": q_nkg_gold_comp_match,
@@ -2427,7 +2417,6 @@ def _entities_oracle_sql(num_hashes: int = 12, bands: int = 6,
     """
 
 
-_STOP_EN = "['the','and','of','to','a','in','is','it','that','was']"
 _LANGS_SQL = """
   ('en', ['the','and','of','to','a','in','is','it','that','was']),
   ('de', ['der','die','das','und','ist','ein','nicht','mit','auf']),
@@ -3549,21 +3538,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(vec_id AS BIGINT) AS vec_id,
                    CAST(rank AS INT) AS rank
             FROM ranked WHERE rank <= 10
-        """,
-        "multimodal_features": """
-            WITH m AS (SELECT unnest(range(64)) AS media_id),
-            b AS (
-              SELECT m.media_id, j.j,
-                     CAST((m.media_id*37 + j.j*11 + (j.j*j.j) % 29) % 256
-                          AS DOUBLE) AS byte
-              FROM m, (SELECT unnest(range(256)) AS j) j)
-            SELECT CAST(media_id AS BIGINT) AS media_id,
-                   CASE CAST(media_id % 3 AS INT) WHEN 0 THEN 'image'
-                        WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-                   CAST(16 AS INT) AS feat_dim,
-                   CAST(j // 16 AS INT) AS dim,
-                   sum(byte) / 16 / 255 AS value
-            FROM b GROUP BY media_id, j // 16
         """,
         "emb_neardup": f"""
             WITH b AS (

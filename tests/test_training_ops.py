@@ -7,8 +7,6 @@ from pyspark.sql import functions as F
 from text2nkg_spark.operators.dedup import (
     embedding_cosine_pairs, exact_duplicates, minhash_lsh_pairs,
     ngram_jaccard_pairs, simhash_pairs, word_shingles)
-from text2nkg_spark.operators.multimodal import (
-    extract_features, media_metadata_stats, synth_media_df)
 from text2nkg_spark.operators.similarity import brute_force_topk, lsh_topk
 from text2nkg_spark.operators.textstats import (
     detect_language, fingerprint, quality_features, token_counts)
@@ -351,73 +349,6 @@ def test_contamination_bench_side_broadcasts(spark, docs):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_multimodal_plumbing(spark):
-    media = synth_media_df(spark, n=30)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r.feature) == r.feat_dim == 16 for r in rows)
-    # deterministic across runs
-    again = {r.media_id: r.feature for r in extract_features(media).collect()}
-    for r in rows:
-        assert again[r.media_id] == r.feature
-    stats = media_metadata_stats(media).collect()
-    assert {s.kind for s in stats} == {"image", "audio", "video"}
-
-
-def test_multimodal_resize_exact(spark):
-    """Nearest-neighbor resize vs the closed-form payload formula:
-    resized[y][x] must equal the formula byte at the mapped source index
-    ((y*16)//out_h)*16 + (x*16)//out_w — pure integer arithmetic."""
-    import numpy as np
-
-    from text2nkg_spark.operators.multimodal import (
-        resize_images, synth_media_df)
-
-    media = synth_media_df(spark, n=30)
-    out = {r.media_id: r for r in resize_images(media, 8, 4).collect()}
-    # only image rows survive (media_id % 3 == 0)
-    assert set(out) == {i for i in range(30) if i % 3 == 0}
-    for mid, r in out.items():
-        assert (r.width, r.height) == (8, 4)
-        got = np.frombuffer(r.payload, dtype=np.uint8).reshape(4, 8)
-        for y in range(4):
-            for x in range(8):
-                j = ((y * 16) // 4) * 16 + (x * 16) // 8
-                assert got[y, x] == (mid * 37 + j * 11 + (j * j) % 29) % 256
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        resize_images(media, 0, 4)
-
-
-def test_multimodal_frame_sampling_exact(spark):
-    """Uniform frame sampling: indices (k*16)//n, timestamps
-    idx*duration/16, frame bytes == the formula's 16-byte slice."""
-    import numpy as np
-
-    from text2nkg_spark.operators.multimodal import (
-        sample_frames, synth_media_df)
-
-    media = synth_media_df(spark, n=30)
-    rows = sample_frames(media, n_frames=4).collect()
-    vids = {i for i in range(30) if i % 3 == 2}
-    assert {r.media_id for r in rows} == vids
-    assert len(rows) == 4 * len(vids)
-    for r in rows:
-        assert r.frame_idx in (0, 4, 8, 12)
-        assert r.ts_ms == r.frame_idx * 1000.0 / 16
-        got = np.frombuffer(r.frame, dtype=np.uint8)
-        base = r.frame_idx * 16
-        for k in range(16):
-            j = base + k
-            assert got[k] == (r.media_id * 37 + j * 11 + (j * j) % 29) % 256
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        sample_frames(media, n_frames=17)
 
 
 def test_dedup_clusters_transitive_and_singletons(spark):

@@ -4,16 +4,17 @@ A from-scratch re-expression of the extraction semantics of LHRLAB/Text2NKG
 (reference at /root/reference, NeurIPS 2024) as an idiomatic Spark pipeline:
 
     Iceberg/parquet transcript turns
-      -> per-conversation document assembly      (window functions)
       -> mention detection                        (native SQL run-segmentation)
-      -> span-triple candidate scoring            (Arrow mapInPandas, batched)
-      -> 6-permutation ensemble + decode + NMS    (Arrow applyInPandas per sentence)
+      -> span-triple candidate scoring, 6-permutation ensemble + decode + NMS
+                                                  (one Arrow mapInPandas UDF,
+                                                   extract_facts_fused, per batch)
       -> n-ary fact assembly + compaction         (native SQL groupBy)
       -> entity canonicalization                  (MinHash-LSH + connected components)
       -> partitioned fact/entity tables + lineage manifests
 
-Everything outside the two Arrow UDF families is declarative DataFrame/SQL so
-Catalyst/AQE handle pushdown, pruning, broadcast and skew-join selection.
+Everything outside that one extraction UDF (and the NER head's) is
+declarative DataFrame/SQL so Catalyst/AQE handle pushdown, pruning,
+broadcast and skew-join selection.
 """
 
 __version__ = "0.1.0"

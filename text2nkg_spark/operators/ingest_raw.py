@@ -28,15 +28,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-QUINTUPLET_SCHEMA = (
-    "text string, h_s int, h_e int, t_s int, t_e int, "
-    "v_s int, v_e int, relation string, qualifier string"
-)
-
 
 def quintuplets_to_sentences(q: DataFrame) -> DataFrame:
     """P3 — one row per distinct sentence text with merged annotations.
 
+    Input: one row per quintuplet, columns text string, h_s, h_e, t_s, t_e,
+    v_s, v_e int, relation string, qualifier string.
     Output: text, entities array<struct<start,end>> (distinct, sorted),
     relations array<struct<h_s,h_e,t_s,t_e,rel,
     quals array<struct<v_s,v_e,label>>>> (qualifier sets deduped).

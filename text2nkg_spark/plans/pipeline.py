@@ -1,16 +1,23 @@
 """End-to-end NKG construction pipeline (SURVEY.md §7.2 M1).
 
-    transcripts ──assemble──> documents (invariant-checked)
+    transcripts
         │
-        ├──detect_mentions──> turns+mentions      (HOF fold, no shuffle)
-        ├──[gold join]─────> +gold_relations      (only for the gold scorer)
-        ├──extract_facts────> predictions          (fused Arrow UDF, no shuffle)
-        ├──fact tables─────> facts / fact_qualifiers / compacted
-        └──canonicalize────> entities / mention_to_entity
+        ├──detect_mentions─> sentences     (HOF fold, [gold join] for the
+        │                                   gold scorer, repartition by
+        │                                   (conv_id, turn_idx))
+        ├──extract_facts───> predictions   (fused Arrow UDF, no shuffle)
+        ├──fact tables─────> facts / main_triples / fact_qualifiers / compacted
+        ├──canonicalize────> surface_to_entity / entities
+        ├──rekey───────────> facts_canonical
+        ├──predicted NER───> mention_ner   (unless use_ner_results)
+        └──manifests───────> metrics
 
-The fused extraction path is scan → mapInPandas → write: the only wide
-operations in the whole pipeline are the compaction groupBy and the optional
-gold join, both key-partitioned and AQE-managed.
+The wide operations are the `sentences` repartition (and its optional gold
+join), the `main_triples` and `compacted` aggregations, the distinct
+surfaces of `surface_to_entity`, the join and aggregation of `entities`,
+the `facts_canonical` join, and the eval joins of `metrics` when gold is
+given; all are key-partitioned and AQE-managed.  The extraction itself is
+scan → mapInPandas → write.
 """
 
 from __future__ import annotations

@@ -20,29 +20,11 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 
 from text2nkg_spark.labels import LabelSpace
 
-# processed HyperRED document line (run_re.py:251-268; FIXTURES.md §2)
-REFERENCE_DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("sentences", T.ArrayType(T.ArrayType(T.StringType()))),
-        T.StructField(
-            "ner",
-            T.ArrayType(T.ArrayType(T.ArrayType(T.StringType()))),
-        ),
-        # relations rows are heterogeneous positional lists in the raw file;
-        # they are parsed schema-aware downstream (P1)
-        T.StructField("clusters", T.ArrayType(T.ArrayType(T.StringType()))),
-        T.StructField("doc_key", T.StringType()),
-    ]
-)
-
 
 def read_table(spark: SparkSession, path_or_name: str, fmt: str = "parquet") -> DataFrame:
-    if fmt == "iceberg":
-        return spark.read.format("iceberg").load(path_or_name)
     return spark.read.format(fmt).load(path_or_name)
 
 
