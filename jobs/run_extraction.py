@@ -10,7 +10,8 @@ Cluster usage (north_rule deployment shape):
         --output s3://bucket/nkg/           \
         --scorer hash --format parquet
 
-Local smoke:
+Local smoke, from any cwd (the session puts this checkout on the Python
+workers' path):
 
     python jobs/run_extraction.py --synthetic 2000 --output /tmp/nkg_out
 

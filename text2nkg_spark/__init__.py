@@ -19,7 +19,5 @@ broadcast and skew-join selection.
 
 __version__ = "0.1.0"
 
-from text2nkg_spark.config import PipelineConfig
-from text2nkg_spark.labels import LabelSpace
-
-__all__ = ["PipelineConfig", "LabelSpace"]
+# No imports here: the Python worker daemon (worker_daemon.py) runs as a
+# submodule and must start before anything loads pyspark or numpy.

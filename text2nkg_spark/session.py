@@ -5,7 +5,16 @@ Two launch shapes, one factory:
 * **Self-launched** (tests, perfbench, ``python jobs/...``): we pick the
   master (``local[$SPARK_GRAFT_CPUS]``, every core of the host when unset),
   size ``spark.sql.shuffle.partitions`` to the core count, and set driver
-  memory / UI off for local iteration.
+  memory / UI off for local iteration.  The Python workers run from
+  ``worker_daemon`` (``spark.python.daemon.module``): Spark puts
+  ``pyspark.zip`` first on their path, and every task then re-reads each
+  zipimporter's whole archive (~0.1 CPU-s a task); the daemon drops
+  Spark's zips when the same pyspark and py4j versions import from
+  elsewhere.  This package's parent directory goes on the workers'
+  ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so a job runs from any
+  cwd.  Both are set for a ``local`` master only: a cluster's executors
+  may have nothing but the zip, and not this checkout.  ``extra=``
+  overrides either conf.
 * **Under ``spark-submit``** (the north-rule deployment:
   ``spark-submit --py-files text2nkg_spark.zip jobs/...``): the launcher owns
   the master and resources — ``--master yarn``/``k8s://...``, executor and
@@ -29,6 +38,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
+
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
 
 
 def _under_spark_submit() -> bool:
@@ -71,6 +83,13 @@ def get_spark(
                     os.environ.get("SPARK_DRIVER_MEM", "16g"))
             .config("spark.ui.enabled", "false")
         )
+        if master.startswith("local") and not _under_spark_submit():
+            # workers share this host: they import pyspark from
+            # site-packages (worker_daemon.py) and this package from where
+            # the driver imported it
+            b = (b.config("spark.python.daemon.module",
+                          "text2nkg_spark.worker_daemon")
+                 .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT))
     if shuffle_partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
 
