@@ -1,9 +1,10 @@
 """Where self-launched Python workers import pyspark and this package from.
 
 ``session.get_spark`` runs the worker daemon as ``worker_daemon`` in local
-mode, which drops Spark's ``pyspark.zip`` and ``py4j-*-src.zip`` from the
-worker path when the same versions import from elsewhere, and puts this
-package's parent directory on the workers' ``PYTHONPATH``.
+mode.  It drops from the worker path Spark's ``pyspark.zip`` and
+``py4j-*-src.zip`` when the same versions import from elsewhere, and every
+archive with no Python in it (Spark's spark-core jar).  ``get_spark`` also
+puts this package's parent directory on the workers' ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -12,8 +13,9 @@ import json
 import os
 import subprocess
 import sys
+import zipfile
 
-from text2nkg_spark.worker_daemon import droppable
+from text2nkg_spark.worker_daemon import codeless, droppable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -48,6 +50,45 @@ def test_unrelated_zips_are_always_kept():
             "/site-packages"]
     assert droppable(user, ZIPPED, dict(ZIPPED)) == []
     assert USER_ZIP not in droppable(PATH, ZIPPED, dict(ZIPPED))
+
+
+def _archive(path, *members):
+    with zipfile.ZipFile(path, "w") as z:
+        for m in members:
+            z.writestr(m, "")
+    return str(path)
+
+
+def test_archive_of_classes_only_is_dropped(tmp_path):
+    jar = _archive(tmp_path / "core.jar", "META-INF/MANIFEST.MF",
+                   "org/apache/Foo.class", "org/apache/Foo$1.class")
+    assert codeless([str(tmp_path), jar, "/site-packages", jar]) == [jar]
+
+
+def test_archive_with_a_python_module_is_kept(tmp_path):
+    zip_ = _archive(tmp_path / "deps.zip", "README", "dep/mod.py")
+    jar = _archive(tmp_path / "mixed.jar", "org/Foo.class", "org/bar.pyc")
+    assert codeless([zip_, jar]) == []
+
+
+def test_missing_path_and_directory_are_kept(tmp_path):
+    not_zip = tmp_path / "notes.txt"
+    not_zip.write_text("no archive")
+    assert codeless([str(tmp_path), str(tmp_path / "gone.jar"),
+                     str(not_zip)]) == []
+
+
+def test_workers_hold_no_archive_importer(spark):
+    def seen(it):
+        for _ in it:
+            yield (list(sys.path),
+                   sorted({type(f).__name__
+                           for f in sys.path_importer_cache.values()}))
+
+    path, finders = spark.sparkContext.parallelize([0], 1) \
+        .mapPartitions(seen).collect()[0]
+    assert not any(e.endswith(".jar") for e in path), path
+    assert "zipimporter" not in finders, finders
 
 
 def test_workers_import_pyspark_outside_zips(spark):

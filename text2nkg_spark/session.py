@@ -4,17 +4,20 @@ Two launch shapes, one factory:
 
 * **Self-launched** (tests, perfbench, ``python jobs/...``): we pick the
   master (``local[$SPARK_GRAFT_CPUS]``, every core of the host when unset),
-  size ``spark.sql.shuffle.partitions`` to the core count, and set driver
-  memory / UI off for local iteration.  The Python workers run from
-  ``worker_daemon`` (``spark.python.daemon.module``): Spark puts
-  ``pyspark.zip`` first on their path, and every task then re-reads each
-  zipimporter's whole archive (~0.1 CPU-s a task); the daemon drops
-  Spark's zips when the same pyspark and py4j versions import from
-  elsewhere.  This package's parent directory goes on the workers'
-  ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so a job runs from any
-  cwd.  Both are set for a ``local`` master only: a cluster's executors
-  may have nothing but the zip, and not this checkout.  ``extra=``
-  overrides either conf.
+  size ``spark.sql.shuffle.partitions`` to its core count (at least 8;
+  ``local_cores``), and set driver memory / UI off for local iteration.
+  The Python workers run from ``worker_daemon``
+  (``spark.python.daemon.module``): Spark puts ``pyspark.zip`` first on
+  their path and its ``spark-core`` jar on it, and every task then
+  re-reads each zipimporter's whole archive (~0.1 CPU-s a task for the
+  zip, ~60 ms for the jar); the daemon drops Spark's zips when the same
+  pyspark and py4j versions import from elsewhere, and every archive with
+  no ``.py``/``.pyc`` member, such as the jar, which can import nothing
+  but empty namespace packages.  This package's parent directory goes on
+  the workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so a job
+  runs from any cwd.  Both are set for a ``local`` master only: a
+  cluster's executors may have nothing but the zip, and not this
+  checkout.  ``extra=`` overrides either conf.
 * **Under ``spark-submit``** (the north-rule deployment:
   ``spark-submit --py-files text2nkg_spark.zip jobs/...``): the launcher owns
   the master and resources — ``--master yarn``/``k8s://...``, executor and
@@ -33,6 +36,7 @@ stages, UTC so timestamp arithmetic is deployment-independent.
 from __future__ import annotations
 
 import os
+import re
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +45,8 @@ from pyspark.sql.types import DataType
 
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(__file__)))
+# Spark's own local-master forms (SparkContext.createTaskScheduler)
+_LOCAL = re.compile(r"local(?:\[([0-9]+|\*)(?:\s*,\s*[0-9]+)?\])?")
 
 
 def _under_spark_submit() -> bool:
@@ -51,6 +57,19 @@ def _under_spark_submit() -> bool:
     self-launched python process has no gateway yet.
     """
     return "PYSPARK_GATEWAY_PORT" in os.environ
+
+
+def local_cores(master: str) -> int | None:
+    """The cores a ``local``, ``local[N]``, ``local[*]``, ``local[N,F]`` or
+    ``local[*,F]`` master runs tasks on (``*``: every core of the host);
+    None for any other master."""
+    m = _LOCAL.fullmatch(master)
+    if m is None:
+        return None
+    n = m.group(1)
+    if n is None:
+        return 1
+    return (os.cpu_count() or 1) if n == "*" else int(n)
 
 
 def get_spark(
@@ -66,11 +85,8 @@ def get_spark(
         cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
         master = master or f"local[{cores}]"
         if shuffle_partitions is None:
-            try:
-                shuffle_partitions = max(
-                    8, int(master.split("[")[1].rstrip("]*")))
-            except (IndexError, ValueError):
-                shuffle_partitions = 32
+            n = local_cores(master)
+            shuffle_partitions = 32 if n is None else max(8, n)
         b = (
             b.master(master)
             # local mode: the driver heap IS the whole cluster's executor

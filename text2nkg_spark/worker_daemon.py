@@ -1,19 +1,33 @@
-"""Spark's Python worker daemon, importing pyspark from outside its zips.
+"""Spark's Python worker daemon, with no archive on its path that a task
+re-reads for nothing.
 
 Spark launches the worker daemon with ``$SPARK_HOME/python/lib/pyspark.zip``
-and ``py4j-*-src.zip`` first on ``PYTHONPATH``.  Every task then calls
+and ``py4j-*-src.zip`` first on ``PYTHONPATH``, and its
+``PythonUtils.sparkPythonPath`` adds ``$SPARK_HOME/jars/spark-core_*.jar``
+(5,359 entries, not one of them Python).  Every task then calls
 ``importlib.invalidate_caches()`` (``pyspark/worker_util.py``), and each
 zipimporter re-reads its whole archive on that call: ~9 ms per importer
-for the 1,328-entry ``pyspark.zip``, and a worker holds one importer per
-pyspark package it has imported from the zip.
+for the 1,328-entry ``pyspark.zip``, one importer per pyspark package
+imported from it, and ~30 ms for each of the jar's two.  The jar gets its
+importers from the stdlib ``copy`` module's Jython probe, ``from
+org.python.core import PyStringMap``: one for the jar, one for
+``<jar>/org``.
 
 ``session.get_spark`` sets this module as ``spark.python.daemon.module`` in
 self-launched (local) mode.  Before anything imports pyspark it removes
-those two zips from ``sys.path`` and ``sys.path_importer_cache``, each only
-when the rest of the path holds the same version of its package, then runs
-``pyspark.daemon.manager()``.  Forked workers then import pyspark and py4j
-from their compiled copies (site-packages), and no zipimporter of theirs
-is re-read per task.  Any other zip on the path stays.
+from ``sys.path`` and ``sys.path_importer_cache``
+
+* the two Spark zips, each only when the rest of the path holds the same
+  version of its package (``droppable``);
+* every archive that holds no ``.py`` or ``.pyc`` member (``codeless``),
+  such as the jar, with each directory in it (``<jar>/org``): a
+  zipimporter over it imports nothing but empty namespace packages, and
+  the probe above catches its ``ImportError``.
+
+then runs ``pyspark.daemon.manager()``.  Forked workers import pyspark and
+py4j from their compiled copies (site-packages) and hold no zipimporter
+that a task re-reads.  Any other archive with Python in it stays, a
+``--py-files`` zip among them.
 """
 
 from __future__ import annotations
@@ -53,6 +67,22 @@ def droppable(path: list[str], zipped: dict[str, str | None],
             and zipped.get(pkg) == elsewhere.get(pkg)]
 
 
+def codeless(path: list[str]) -> list[str]:
+    """The archives on ``path`` that hold no ``.py`` or ``.pyc`` member.
+    A plain directory, a missing path or a file that is not a readable
+    zip is never one."""
+    return [e for e in dict.fromkeys(path)
+            if os.path.isfile(e) and not _holds_code(e)]
+
+
+def _holds_code(archive: str) -> bool:
+    try:
+        with zipfile.ZipFile(archive) as z:
+            return any(n.endswith((".py", ".pyc")) for n in z.namelist())
+    except (OSError, zipfile.BadZipFile):
+        return True
+
+
 def _version(text: str) -> str | None:
     m = _VERSION.search(text)
     return m.group(1) if m else None
@@ -81,16 +111,21 @@ def _dir_version(path: list[str], pkg: str) -> str | None:
 
 
 def main() -> None:
+    bare = codeless(sys.path)
     zips = spark_zips(sys.path)
-    rest = [e for e in sys.path if e not in zips.values()]
-    drop = droppable(
+    rest = [e for e in sys.path if e not in zips.values() and e not in bare]
+    drop = bare + droppable(
         sys.path,
         {pkg: _zip_version(e, pkg) for pkg, e in zips.items()},
         {pkg: _dir_version(rest, pkg) for pkg in zips})
-    # every copy: the user's PYTHONPATH may name the zip again
-    sys.path[:] = [e for e in sys.path if e not in drop]
-    for key in [k for k in sys.path_importer_cache
-                if any(k == e or k.startswith(e + os.sep) for e in drop)]:
+
+    def dropped(entry: str) -> bool:
+        # every copy, and every directory in the archive such as
+        # ``<jar>/org``: the user's PYTHONPATH may name the zip again
+        return any(entry == e or entry.startswith(e + os.sep) for e in drop)
+
+    sys.path[:] = [e for e in sys.path if not dropped(e)]
+    for key in [k for k in sys.path_importer_cache if dropped(k)]:
         del sys.path_importer_cache[key]
 
     from pyspark import daemon
