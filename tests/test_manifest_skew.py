@@ -1,5 +1,7 @@
 """Checkpoint manifests: exact resume, input keys and stage lineage."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -416,3 +418,19 @@ def test_rerun_in_a_fresh_process_resumes_every_stage(spark, parquet_in,
         check=True, timeout=600, capture_output=True, text=True)
     assert walls() == before
     assert rerun.stdout.split()[-1] == "0"
+
+
+def test_wall_clock_step_back_keeps_stage_time_sane(spark, tr, tmp_path,
+                                                     monkeypatch):
+    """A stage's ``wall_s`` is a duration: a wall-clock step (NTP, a VM
+    resume) during the build must not make it negative or huge."""
+    real, step = time.time, [0.0]
+    monkeypatch.setattr(time, "time", lambda: real() + step[0])
+
+    def build():
+        step[0] = -3600.0  # the wall clock is stepped back an hour
+        return tr.select("conv_id", "turn_idx")
+
+    StageManifest(str(tmp_path)).run_stage(spark, "proj", "fp", build)
+    wall_s = StageManifest(str(tmp_path)).read_meta("proj")["wall_s"]
+    assert 0 <= wall_s < 600

@@ -1,10 +1,16 @@
-"""``get_spark`` sizes shuffle partitions to a local master's cores."""
+"""``get_spark`` sizes shuffle partitions to a local master's cores and
+starts a self-launched local JVM with C1 only."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
-from text2nkg_spark.session import local_cores
+from pyspark.sql import SparkSession
+
+from text2nkg_spark.session import get_spark, local_cores
 
 
 def test_local_cores_reads_every_local_master_form():
@@ -20,3 +26,41 @@ def test_other_masters_have_no_local_cores():
     for master in ("yarn", "spark://h:7077", "k8s://https://h:443",
                    "local-cluster[2,1,1024]"):
         assert local_cores(master) is None
+
+
+_C1 = "-XX:TieredStopAtLevel=1"
+
+
+def test_local_jvm_compiles_with_c1_only(spark):
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    assert _C1 in mx.getRuntimeMXBean().getInputArguments()
+
+
+def test_caller_java_options_reach_the_jvm_beside_c1():
+    """``extra=`` passes ``spark.driver.extraJavaOptions``; Spark appends it
+    to ``defaultJavaOptions``, so the JVM gets both."""
+    code = (
+        "import json\n"
+        "from text2nkg_spark.session import get_spark\n"
+        "s = get_spark('jvm-args', master='local[1]', extra={\n"
+        "    'spark.driver.extraJavaOptions': '-Dt2n.probe=1'})\n"
+        "mx = s.sparkContext._jvm.java.lang.management.ManagementFactory\n"
+        "print(json.dumps(list(mx.getRuntimeMXBean().getInputArguments())))\n"
+        "s.stop()\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run([sys.executable, "-c", code], cwd=repo,
+                         capture_output=True, text=True, timeout=300)
+    assert res.returncode == 0, res.stderr[-3000:]
+    args = json.loads(res.stdout.strip().splitlines()[-1])
+    assert _C1 in args and "-Dt2n.probe=1" in args
+
+
+def test_spark_submit_session_gets_no_jvm_option(monkeypatch):
+    """Under spark-submit the launcher owns the JVM: the factory sets no
+    JVM option (it could not reach the running JVM anyway)."""
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda self: dict(self._options))
+    conf = get_spark("submitted")
+    assert not [k for k in conf if "JavaOptions" in k]
+    assert "spark.python.daemon.module" not in conf

@@ -112,7 +112,7 @@ class StageManifest:
         if meta is not None:
             os.remove(self._meta_path(stage))
 
-        t0 = time.time()
+        t0 = time.perf_counter()
         df = build()
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -132,7 +132,7 @@ class StageManifest:
             "schema": schema.jsonValue(),
             "rows_out": sum(p["rows"] for p in parts),
             "partitions": parts,
-            "wall_s": time.time() - t0,
+            "wall_s": time.perf_counter() - t0,
         }
         tmp = self._meta_path(stage) + ".tmp"
         with open(tmp, "w") as f:

@@ -15,18 +15,33 @@ Two launch shapes, one factory:
   no ``.py``/``.pyc`` member, such as the jar, which can import nothing
   but empty namespace packages.  This package's parent directory goes on
   the workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so a job
-  runs from any cwd.  Both are set for a ``local`` master only: a
-  cluster's executors may have nothing but the zip, and not this
-  checkout.  ``extra=`` overrides either conf.
+  runs from any cwd.  The driver JVM, which is also the only executor,
+  compiles with C1 only (``-XX:TieredStopAtLevel=1``): per-thread CPU
+  from ``/proc`` showed that HotSpot's C2 compiler threads used more of a
+  stream drain's CPU than all executor task threads together (4.4 CPU-s
+  against 1.3 in the first of 22 drains in one process, still 0.6-1.0
+  against 0.8-0.9 in the last seven), compiling Spark's own framework
+  code (parquet, Arrow, scheduler, streaming; no Janino compile ran).
+  That code is overhead, not tight loops, so C1's cheaper and slower
+  code costs less than C2 spends to compile it; a JVM that lives long
+  enough for C2 to pay off (a test suite, a long build) runs its tasks
+  slower.
+  The flag goes in ``spark.driver.defaultJavaOptions``: Spark appends
+  ``spark.driver.extraJavaOptions`` to it, so a caller's own JVM options
+  (perfbench's ``-Djava.io.tmpdir``) still reach the JVM beside it.  All
+  three are set for a ``local`` master only: a cluster's executors may
+  have nothing but the zip, and not this checkout, and run in JVMs the
+  factory does not start.  ``extra=`` overrides any of them.
 * **Under ``spark-submit``** (the north-rule deployment:
   ``spark-submit --py-files text2nkg_spark.zip jobs/...``): the launcher owns
   the master and resources — ``--master yarn``/``k8s://...``, executor and
-  driver sizing, ``--conf`` overrides.  We detect the launcher via the
-  ``PYSPARK_GATEWAY_PORT`` env var its PythonRunner exports
-  (pyspark/java_gateway.py:57) and then never touch master, driver memory,
-  UI, or shuffle-partition count — the launcher's ``--master``/``--conf``
-  rule those.  The engine-semantics configs below are still pinned (they
-  are part of the engine contract); override them via ``extra=``.
+  driver sizing, JVM options, ``--conf`` overrides.  We detect the
+  launcher via the ``PYSPARK_GATEWAY_PORT`` env var its PythonRunner
+  exports (pyspark/java_gateway.py:57) and then never touch master,
+  driver memory, JVM options, UI, or shuffle-partition count — the
+  launcher's ``--master``/``--conf`` rule those.  The engine-semantics
+  configs below are still pinned (they are part of the engine contract);
+  override them via ``extra=``.
 
 Engine-semantics configs are part of the correctness/perf contract: AQE on
 (adaptive coalescing + skew-join splitting), Arrow on for the two pandas-UDF
@@ -105,7 +120,10 @@ def get_spark(
             # the driver imported it
             b = (b.config("spark.python.daemon.module",
                           "text2nkg_spark.worker_daemon")
-                 .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT))
+                 .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+                 # C1 only; a caller's extraJavaOptions is appended to it
+                 .config("spark.driver.defaultJavaOptions",
+                         "-XX:TieredStopAtLevel=1"))
     if shuffle_partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
 
