@@ -1,5 +1,5 @@
 """``get_spark`` sizes shuffle partitions to a local master's cores and
-starts a self-launched local JVM with C1 only."""
+raises a self-launched local JVM's C2 thresholds."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from text2nkg_spark.session import get_spark, local_cores
+from text2nkg_spark.session import _JIT_OPTIONS, get_spark, local_cores
 
 
 def test_local_cores_reads_every_local_master_form():
@@ -28,15 +28,19 @@ def test_other_masters_have_no_local_cores():
         assert local_cores(master) is None
 
 
-_C1 = "-XX:TieredStopAtLevel=1"
+def test_local_jvm_runs_with_the_raised_c2_thresholds(spark):
+    """Spark adds ``-XX:+IgnoreUnrecognizedVMOptions``, so a misspelt flag
+    would pass silently: read the values the JVM runs with."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    for opt in _JIT_OPTIONS.split():
+        name, value = opt.removeprefix("-XX:").split("=")
+        assert bean.getVMOption(name).getValue() == value
 
 
-def test_local_jvm_compiles_with_c1_only(spark):
-    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-    assert _C1 in mx.getRuntimeMXBean().getInputArguments()
-
-
-def test_caller_java_options_reach_the_jvm_beside_c1():
+def test_caller_java_options_reach_the_jvm_beside_the_jit_options():
     """``extra=`` passes ``spark.driver.extraJavaOptions``; Spark appends it
     to ``defaultJavaOptions``, so the JVM gets both."""
     code = (
@@ -52,7 +56,8 @@ def test_caller_java_options_reach_the_jvm_beside_c1():
                          capture_output=True, text=True, timeout=300)
     assert res.returncode == 0, res.stderr[-3000:]
     args = json.loads(res.stdout.strip().splitlines()[-1])
-    assert _C1 in args and "-Dt2n.probe=1" in args
+    assert set(_JIT_OPTIONS.split()) <= set(args)
+    assert "-Dt2n.probe=1" in args
 
 
 def test_spark_submit_session_gets_no_jvm_option(monkeypatch):

@@ -16,22 +16,22 @@ Two launch shapes, one factory:
   but empty namespace packages.  This package's parent directory goes on
   the workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so a job
   runs from any cwd.  The driver JVM, which is also the only executor,
-  compiles with C1 only (``-XX:TieredStopAtLevel=1``): per-thread CPU
-  from ``/proc`` showed that HotSpot's C2 compiler threads used more of a
-  stream drain's CPU than all executor task threads together (4.4 CPU-s
-  against 1.3 in the first of 22 drains in one process, still 0.6-1.0
-  against 0.8-0.9 in the last seven), compiling Spark's own framework
-  code (parquet, Arrow, scheduler, streaming; no Janino compile ran).
-  That code is overhead, not tight loops, so C1's cheaper and slower
-  code costs less than C2 spends to compile it; a JVM that lives long
-  enough for C2 to pay off (a test suite, a long build) runs its tasks
-  slower.
-  The flag goes in ``spark.driver.defaultJavaOptions``: Spark appends
+  compiles a method with C2 only once it has run ten times HotSpot's
+  default tier-4 counts (``_JIT_OPTIONS``).  In a short local job C2's
+  threads spent more CPU than the executor tasks, compiling Spark's own
+  framework code (parquet, Arrow, scheduler, streaming) that does not
+  run often enough there to repay it; the methods that stay hot in a
+  long build, a test suite or a long-running stream still reach C2.
+  C1 only (``-XX:TieredStopAtLevel=1``) saves more in a short job but
+  leaves a warm JVM's tasks slower, and one C2 compiler thread
+  (``-XX:CICompilerCount=2``) only moves C2's work from a stream's
+  set-up into its drains.  CHANGES.md (PR 15) has the measurements.
+  The flags go in ``spark.driver.defaultJavaOptions``: Spark appends
   ``spark.driver.extraJavaOptions`` to it, so a caller's own JVM options
-  (perfbench's ``-Djava.io.tmpdir``) still reach the JVM beside it.  All
-  three are set for a ``local`` master only: a cluster's executors may
-  have nothing but the zip, and not this checkout, and run in JVMs the
-  factory does not start.  ``extra=`` overrides any of them.
+  (perfbench's ``-Djava.io.tmpdir``) still reach the JVM beside them.
+  All three are set for a ``local`` master only: a cluster's executors
+  may have nothing but the zip, and not this checkout, and run in JVMs
+  the factory does not start.  ``extra=`` overrides any of them.
 * **Under ``spark-submit``** (the north-rule deployment:
   ``spark-submit --py-files text2nkg_spark.zip jobs/...``): the launcher owns
   the master and resources — ``--master yarn``/``k8s://...``, executor and
@@ -60,6 +60,11 @@ from pyspark.sql.types import DataType
 
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(__file__)))
+# HotSpot's tier-4 (C2) thresholds, each ten times its default
+_JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=50000"
+                " -XX:Tier4MinInvocationThreshold=6000"
+                " -XX:Tier4CompileThreshold=150000"
+                " -XX:Tier4BackEdgeThreshold=400000")
 # Spark's own local-master forms (SparkContext.createTaskScheduler)
 _LOCAL = re.compile(r"local(?:\[([0-9]+|\*)(?:\s*,\s*[0-9]+)?\])?")
 
@@ -121,9 +126,8 @@ def get_spark(
             b = (b.config("spark.python.daemon.module",
                           "text2nkg_spark.worker_daemon")
                  .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
-                 # C1 only; a caller's extraJavaOptions is appended to it
-                 .config("spark.driver.defaultJavaOptions",
-                         "-XX:TieredStopAtLevel=1"))
+                 # a caller's extraJavaOptions is appended to it
+                 .config("spark.driver.defaultJavaOptions", _JIT_OPTIONS))
     if shuffle_partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
 
